@@ -528,11 +528,12 @@ def q_ppr_scores(spark, sf_dir):
     """Converged PPR, oracle-checked: a DuckDB recursive-CTE power
     iteration reproduces the same fixed point.  tol=1e-12 keeps the
     convergence gap (~tol/(1-d)) three orders below the 1e-6 rounding
-    granularity, so both sides round identically.  mode='csr' pins the
-    gate to the distributed Spark kernel (broadcast rank + mapInPandas
-    bincount blocks + shuffle agg) — auto would route this sf to the
-    driver-local fast path and the oracle would verify numpy, not Spark
-    (ADVICE.md round-1)."""
+    granularity, so both sides round identically.  mode='csr' (the alias
+    of the dataframe backend) pins the gate to the distributed Spark
+    kernel (salted two-stage aggregation over a (query_id, node_id, rank)
+    table, |Q| = 1) — auto would route this sf to the driver-local fast
+    path and the oracle would verify numpy, not Spark (ADVICE.md
+    round-1)."""
     edges = _phrase_edges(_tokens(spark, sf_dir))
     seeds = (
         edges.select(F.col("src").alias("node_id")).distinct()
@@ -549,7 +550,7 @@ def q_ppr_scores(spark, sf_dir):
 def q_pagerank(spark, sf_dir):
     """Global PageRank (uniform teleport — the north_rule's first named
     algorithm) at the same tol/rounding discipline as q_ppr_scores;
-    distributed csr kernel pinned."""
+    distributed dataframe kernel pinned through its 'csr' alias."""
     from hipporag_spark.ppr import pagerank
 
     edges = _phrase_edges(_tokens(spark, sf_dir))

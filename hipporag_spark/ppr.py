@@ -18,40 +18,44 @@ to ``allclose(atol=1e-6)`` at convergence.  Semantics (SURVEY.md §4.3.1):
 - damping: engine default 0.85 (north_star); the reference's config
   default 0.5 (``config_utils.py:180-183``) is accepted as a parameter.
 
-Two physical strategies, auto-selected:
+One router, three backends.  Every run goes through :func:`_ppr` with a
+``(query_id, node_id, reset_weight)`` reset table and iterates a rank
+MATRIX (one column per query): :func:`personalized_pagerank_batch` is the
+retrieval entry, :func:`personalized_pagerank` the |Q| = 1 case and
+:func:`pagerank` its uniform-reset special case.  The router clamps the
+resets and, for ``mode='auto'``, counts symmetrized edges to pick:
 
-``mode='csr'`` (node count ≤ ``csr_node_limit``)
-    Edge table densified to int32 ids once, blocked by ``src_idx %
-    n_blocks``, persisted.  Each superstep is ONE Spark job: broadcast
-    the float64 rank vector, ``mapInPandas`` runs a vectorized
-    ``np.bincount`` scatter-add per block (map-side combine — every hub
-    dst is pre-aggregated inside each block, so hot keys never
-    concentrate in one shuffle partition), tiny (dst, partial) rows are
-    summed by a ``groupBy``, and the driver blends damping/dangling/reset
-    in numpy.  This is the high-throughput path benched in ``bench.py``.
+``mode='local'`` (auto at ≤ ``local_edge_limit`` symmetrized edges)
+    One collect of the edge list; the (n_nodes × n_queries) rank matrix
+    iterates in driver numpy.  Per-superstep Spark job launch would
+    dominate at this size (SURVEY.md §7 'hard parts').
 
-``mode='dataframe'`` (any scale)
-    Pure DataFrame superstep: ``ranks ⋈ norm_edges`` (rank side
-    broadcast when small), explicit two-stage salted aggregation
-    ``groupBy(dst, salt) → groupBy(dst)`` for hub destinations, damping
-    blend as Catalyst expressions, L1 delta + next dangling mass in one
-    aggregate job.  State stays distributed end-to-end — this is the
-    10^12-edge path; at that scale ranks are hash-partitioned the same
-    way as the persisted edge table so the per-superstep shuffle touches
-    only the rank vector, never re-shuffles edges.
+``mode='dataframe'`` (auto between the two limits; ``'csr'`` is an alias)
+    Rank state is a distributed ``(query_id, node_id, rank)`` table.  Each
+    superstep is ``ranks ⋈ norm_edges`` with an explicit two-stage salted
+    aggregation ``groupBy(query_id, dst, salt) → groupBy(query_id, dst)``
+    for hub destinations, the damping blend as Catalyst expressions, and
+    ONE collected scalar (the max per-query L1 delta).  Nothing
+    O(n_nodes) lands on the driver — the no-driver-state path at any scale.
 
-Both paths checkpoint per-superstep state + metrics through
-:class:`hipporag_spark.checkpoint.CheckpointStore` and resume
-mid-iteration (``resume=True``).
+``mode='blocks'`` (auto above ``blocks_edge_limit`` symmetrized edges)
+    One-time :func:`prepare_csr_blocks` layout, then the CSR block kernel
+    of :func:`ppr_from_blocks` run as a rank-matrix superstep,
+    ``query_chunk`` queries per Spark job.
 
-Beyond the single-query modes this module provides :func:`pagerank`
-(global uniform-teleport variant), :func:`personalized_pagerank_batch`
-(multi-query; distributed (query_id, node_id) dataframe mode above the
-local threshold), and the CSR-block paths :func:`ppr_from_blocks` /
-:func:`ppr_from_blocks_batched` over :func:`prepare_csr_blocks` layouts
-— the throughput/benchmark path, with the round-2 "relabeled"
-identity-permutation layout (contiguous per-task slices, single-gather
-folded kernel).
+``local`` and ``dataframe`` checkpoint the same ``(query_id, node_id,
+rank)`` table through :class:`hipporag_spark.checkpoint.CheckpointStore`
+and resume mid-iteration from each other's checkpoints (``resume=True``).
+``blocks`` does not checkpoint: auto keeps checkpointed runs on
+``dataframe`` and a pinned ``mode='blocks'`` with ``checkpoint_dir``
+raises.  Every backend reports one metrics record per superstep:
+``superstep``, ``mode``, ``l1_delta`` (max over queries), ``wall_ms``,
+``edges_processed``.
+
+The CSR-block paths :func:`ppr_from_blocks` / :func:`ppr_from_blocks_batched`
+over :func:`prepare_csr_blocks` layouts are the throughput/benchmark path,
+with the round-2 "relabeled" identity-permutation layout (contiguous
+per-task slices, single-gather folded kernel).
 """
 
 from __future__ import annotations
@@ -67,44 +71,15 @@ from pyspark.sql import functions as F
 from .checkpoint import CheckpointStore
 from .graph import symmetrize
 
+_BATCH_SCHEMA = "query_id string, node_id string, score double"
+
 
 @dataclass
 class PPRResult:
-    ranks: DataFrame  # (node_id string, score double)
+    ranks: DataFrame  # (node_id, score); the router's carries query_id too
     iterations: int
     converged: bool
     metrics: list[dict] = field(default_factory=list)
-
-
-def _clamped_reset(reset: DataFrame) -> DataFrame:
-    """NaN/negative reset weights → 0 (``HippoRAG.py:1599``)."""
-    w = F.col("reset_weight").cast("double")
-    return reset.select(
-        "node_id",
-        F.when(F.isnan(w) | (w < 0), F.lit(0.0)).otherwise(w).alias("reset_weight"),
-    )
-
-
-def _node_frame(sym: DataFrame, reset: DataFrame) -> DataFrame:
-    """Universe = edge endpoints ∪ reset nodes, with normalized reset weight,
-    out-weight and dangling flag."""
-    endpoints = sym.select(F.col("src").alias("node_id")).distinct()
-    universe = endpoints.unionByName(reset.select("node_id")).distinct()
-    outw = sym.groupBy("src").agg(F.sum("weight").alias("out_w"))
-    nodes = (
-        universe.join(reset, "node_id", "left")
-        .join(outw.withColumnRenamed("src", "node_id"), "node_id", "left")
-        .select(
-            "node_id",
-            F.coalesce(F.col("reset_weight"), F.lit(0.0)).alias("reset_w"),
-            F.coalesce(F.col("out_w"), F.lit(0.0)).alias("out_w"),
-        )
-        .withColumn("is_dangling", F.col("out_w") <= 0.0)
-    )
-    total = nodes.agg(F.sum("reset_w")).collect()[0][0]
-    if total is None or total <= 0:
-        raise ValueError("reset vector sums to 0 after NaN/negative clamping")
-    return nodes.withColumn("reset_w", F.col("reset_w") / F.lit(float(total)))
 
 
 def personalized_pagerank(
@@ -116,7 +91,6 @@ def personalized_pagerank(
     max_iter: int = 500,
     mode: str = "auto",
     local_edge_limit: int = 2_000_000,
-    csr_node_limit: int = 2_000_000,
     n_blocks: int | None = None,
     salt: int = 16,
     checkpoint_dir: str | None = None,
@@ -126,33 +100,17 @@ def personalized_pagerank(
     """Run PPR over directed edge rows ``(src, dst, weight[, relation])``.
 
     ``reset``: DataFrame ``(node_id, reset_weight)``; missing nodes get 0.
+    The |Q| = 1 case of :func:`personalized_pagerank_batch`: same modes,
+    routing, checkpoint format and metrics.  ``ranks`` is ``(node_id,
+    score)`` over edge endpoints ∪ reset nodes.
     """
-    sym = symmetrize(edges).persist()
-    reset_c = _clamped_reset(reset)
-    nodes = _node_frame(sym, reset_c).persist()
-    n_nodes = nodes.count()
-
-    if mode == "auto":
-        n_sym_edges = sym.count()
-        if n_sym_edges <= local_edge_limit:
-            mode = "local"
-        elif n_nodes <= csr_node_limit:
-            mode = "csr"
-        else:
-            mode = "dataframe"
-    store = CheckpointStore(checkpoint_dir) if checkpoint_dir else None
-
-    if mode == "local":
-        res = _run_local(spark, sym, nodes, damping, tol, max_iter,
-                         store, checkpoint_every, resume)
-    elif mode == "csr":
-        res = _run_csr(spark, sym, nodes, n_nodes, damping, tol, max_iter,
-                       n_blocks, store, checkpoint_every, resume)
-    else:
-        res = _run_dataframe(spark, sym, nodes, damping, tol, max_iter,
-                             salt, store, checkpoint_every, resume)
-    sym.unpersist()
-    nodes.unpersist()
+    resets = reset.select(F.lit("q").alias("query_id"), "node_id", "reset_weight")
+    res = _ppr(spark, edges, resets, damping, tol, max_iter, mode,
+               local_edge_limit, n_blocks, salt, checkpoint_dir,
+               checkpoint_every, resume)
+    if res is None:
+        raise ValueError("reset vector is empty")
+    res.ranks = res.ranks.drop("query_id")
     return res
 
 
@@ -202,42 +160,21 @@ def personalized_pagerank_batch(
     ``HippoRAG.py:406``).  Returns ``(query_id, node_id, score)`` for every
     (universe node × query) pair.  Convergence: max per-query L1 delta
     < tol.  Semantics per query are identical to
-    :func:`personalized_pagerank` (clamp, normalize, dangling, damping).
+    :func:`personalized_pagerank`, which is this with |Q| = 1.
 
-    Two physical strategies:
-
-    ``mode='local'`` (auto when symmetrized edges ≤ ``local_edge_limit``)
-        One collect of the edge list; the (n_nodes × n_queries) rank
-        matrix iterates in driver numpy.  Small-graph fast path only.
-
-    ``mode='dataframe'`` (auto between the two limits)
-        Rank state is a distributed ``(query_id, node_id, rank)`` table;
-        each superstep is the same salted two-stage aggregation as the
-        single-query :func:`_run_dataframe`, keyed by (query_id, dst).
-        Nothing O(n_nodes × n_queries) ever materializes on the driver,
-        and the batch checkpoints/resumes through
-        :class:`~hipporag_spark.checkpoint.CheckpointStore` like the
-        single-query modes.
-
-    ``mode='blocks'`` (auto above ``blocks_edge_limit`` symmetrized
-    edges — default 10^8, VERDICT r4 next-round #5)
-        One-time :func:`prepare_csr_blocks` layout (written under
-        ``blocks_dir``, a temp dir when None), then the CSR block kernel
-        of :func:`ppr_from_blocks` runs a RANK MATRIX superstep:
-        queries are processed ``query_chunk`` columns at a time, each
-        superstep is ONE Spark job whose tasks sweep their dst-blocks
-        once per query column (edge blocks are read once per task from
-        the worker-side cache, amortized across all columns — above the
-        threshold this is ~10× the per-superstep throughput of the
-        dataframe mode, which re-shuffles the (query_id, node_id) rank
-        table every step).  Driver memory is O(n_nodes × query_chunk)
-        floats per chunk plus the O(n_nodes) perm/dangling sidecars —
-        at 10^8 nodes the default chunk of 32 is ~26 GB, so size
-        ``query_chunk`` to the driver (see the capacity note on
-        :func:`prepare_csr_blocks`); ``mode='dataframe'`` remains the
-        no-driver-state alternative at any scale.  Checkpoint/resume is
-        not wired for this mode (use ``'dataframe'`` for resumable
-        batch jobs).
+    Backends (module docstring): ``'local'`` (auto at ≤
+    ``local_edge_limit`` symmetrized edges), ``'dataframe'`` (auto between
+    the limits; ``'csr'`` is accepted as an alias) and ``'blocks'`` (auto
+    above ``blocks_edge_limit`` — default 10^8, VERDICT r4 next-round #5 —
+    unless ``checkpoint_dir`` is set, which keeps the run on
+    ``'dataframe'``).  ``'blocks'`` lays the graph out once under
+    ``blocks_dir`` (a temp dir when None) and runs ``query_chunk`` query
+    columns per superstep job; its driver memory is O(n_nodes ×
+    query_chunk) floats per chunk plus the O(n_nodes) perm/dangling
+    sidecars — at 10^8 nodes the default chunk of 32 is ~26 GB, so size
+    ``query_chunk`` to the driver (see the capacity note on
+    :func:`prepare_csr_blocks`).  It is not resumable: pinning it with a
+    ``checkpoint_dir`` raises ``ValueError``.
 
     ``output_nodes`` (VERDICT r3 "What's wrong" #2): the default output
     is DENSE — one row per (universe node × query), the reference's
@@ -252,6 +189,26 @@ def personalized_pagerank_batch(
     returned row; callers that rank top-k by score desc get identical
     results whenever k rows have nonzero scores.
     """
+    res = _ppr(spark, edges, resets, damping, tol, max_iter, mode,
+               local_edge_limit, n_blocks, salt, checkpoint_dir,
+               checkpoint_every, resume, output_nodes, blocks_edge_limit,
+               blocks_dir, query_chunk)
+    if res is None:  # no queries (e.g. rerank dropped every fact)
+        return spark.createDataFrame([], _BATCH_SCHEMA)
+    return res.ranks
+
+
+def _ppr(spark, edges, resets, damping, tol, max_iter, mode,
+         local_edge_limit, n_blocks, salt, checkpoint_dir, checkpoint_every,
+         resume, output_nodes=None, blocks_edge_limit=100_000_000,
+         blocks_dir=None, query_chunk=32) -> PPRResult | None:
+    """The PPR router: clamp the ``(query_id, node_id, reset_weight)``
+    resets, pick a backend, run it.  ``ranks`` of the result is
+    ``(query_id, node_id, score)``; None when there are no reset rows."""
+    if mode == "blocks" and checkpoint_dir:
+        raise ValueError(
+            "mode='blocks' does not checkpoint; use mode='dataframe' for a "
+            "resumable run, or drop checkpoint_dir")
     sym = symmetrize(edges).persist()
     w = F.col("reset_weight").cast("double")
     resets_c = resets.select(
@@ -259,9 +216,9 @@ def personalized_pagerank_batch(
         "node_id",
         F.when(F.isnan(w) | (w < 0), F.lit(0.0)).otherwise(w).alias("reset_weight"),
     )
-    if resets_c.isEmpty():  # no queries (e.g. rerank dropped every fact)
+    if resets_c.isEmpty():
         sym.unpersist()
-        return spark.createDataFrame([], "query_id string, node_id string, score double")
+        return None
     if mode == "auto":
         # only auto needs the edge count; a pinned mode (e.g. the retrieve
         # gate's mode='dataframe') must not pay an extra pass over sym —
@@ -269,31 +226,54 @@ def personalized_pagerank_batch(
         n_edges = sym.count()
         if n_edges <= local_edge_limit:
             mode = "local"
-        elif n_edges > blocks_edge_limit:
+        elif n_edges > blocks_edge_limit and not checkpoint_dir:
             mode = "blocks"
         else:
             mode = "dataframe"
-    if mode == "csr":  # legacy alias for the pre-round-2 driver-matrix path
+    if mode == "csr":  # accepted alias: the ppr_scores/pagerank_scores gates pin it
         mode = "dataframe"
     store = CheckpointStore(checkpoint_dir) if checkpoint_dir else None
 
     if mode == "local":
-        out = _batch_local(spark, sym, resets_c, damping, tol, max_iter,
-                           output_nodes)
+        res = _batch_local(spark, sym, resets_c, damping, tol, max_iter,
+                           store, checkpoint_every, resume, output_nodes)
     elif mode == "blocks":
-        out = _batch_blocks(spark, edges, sym, resets_c, damping, tol,
+        res = _batch_blocks(spark, edges, sym, resets_c, damping, tol,
                             max_iter, output_nodes, n_blocks, blocks_dir,
                             query_chunk)
     else:
-        out = _batch_dataframe(spark, sym, resets_c, damping, tol, max_iter,
+        res = _batch_dataframe(spark, sym, resets_c, damping, tol, max_iter,
                                salt, store, checkpoint_every, resume,
                                output_nodes)
     sym.unpersist()
-    return out
+    return res
 
 
-def _batch_local(spark, sym, resets_c, damping, tol, max_iter,
-                 output_nodes=None) -> DataFrame:
+def _step_metrics(it, mode, delta, t0, n_edges) -> dict:
+    """The per-superstep metrics record every backend reports."""
+    return {"superstep": it, "mode": mode, "l1_delta": float(delta),
+            "wall_ms": (time.time() - t0) * 1000,
+            "edges_processed": int(n_edges)}
+
+
+def _resume_ranks(spark, store, resume):
+    """``(ranks, start_it)`` from the latest checkpoint — ranks as the
+    ``(query_id, node_id, rank)`` table both checkpointing backends write
+    — or ``(None, 0)`` when there is nothing to resume."""
+    step = store.latest_step() if resume and store is not None else None
+    if step is None:
+        return None, 0
+    ranks, _m = store.read(spark, step)
+    if "query_id" not in ranks.columns:
+        raise ValueError(
+            f"checkpoint {store.root} step {step} holds columns "
+            f"{ranks.columns}; the PPR checkpoint format changed to "
+            "(query_id, node_id, rank) — rerun with a fresh checkpoint_dir")
+    return ranks.select("query_id", "node_id", "rank"), step + 1
+
+
+def _batch_local(spark, sym, resets_c, damping, tol, max_iter, store,
+                 checkpoint_every, resume, output_nodes=None) -> PPRResult:
     """Driver-numpy rank-matrix loop (small graphs).  Node order = sorted
     node_id, query order = sorted query_id — the same deterministic
     ordering the distributed path's output is compared against."""
@@ -333,7 +313,19 @@ def _batch_local(spark, sym, resets_c, damping, tol, max_iter,
     wn = wts[keep] / out_w[src_i]
 
     ranks = R.copy()
-    for _ in range(max_iter):
+    ckpt, start_it = _resume_ranks(spark, store, resume)
+    if ckpt is not None:
+        cpdf = ckpt.toPandas()
+        ranks = np.zeros((n, nq), dtype=np.float64)
+        ranks[cpdf["node_id"].map(pos).to_numpy(), cpdf["query_id"].map(qpos).to_numpy()] = (
+            cpdf["rank"].to_numpy(dtype=np.float64)
+        )
+
+    metrics: list[dict] = []
+    converged = False
+    it = start_it - 1
+    for it in range(start_it, max_iter):
+        t0 = time.time()
         contrib = np.zeros((n, nq), dtype=np.float64)
         for j in range(nq):
             contrib[:, j] = np.bincount(dst_i, weights=ranks[src_i, j] * wn, minlength=n)
@@ -341,7 +333,15 @@ def _batch_local(spark, sym, resets_c, damping, tol, max_iter,
         new = damping * (contrib + dm * R) + (1.0 - damping) * R
         delta = np.abs(new - ranks).sum(axis=0).max()
         ranks = new
+        m = _step_metrics(it, "local", delta, t0, len(src_i))
+        metrics.append(m)
+        if store is not None and (it % checkpoint_every == 0 or delta < tol):
+            # nonzero cells only: the dataframe backend's rank-table format
+            ni, qj = np.nonzero(ranks)
+            store.write(it, spark.createDataFrame(pd.DataFrame(
+                {"query_id": qids[qj], "node_id": node_ids[ni], "rank": ranks[ni, qj]})), m)
         if delta < tol:
+            converged = True
             break
 
     keep_nodes = None
@@ -359,20 +359,21 @@ def _batch_local(spark, sym, resets_c, damping, tol, max_iter,
         frames.append(f)
     pdf_out = pd.concat(frames, ignore_index=True)
     if not len(pdf_out):
-        return spark.createDataFrame([], "query_id string, node_id string, score double")
-    out = spark.createDataFrame(pdf_out)
-    return out.select("query_id", "node_id", "score")
+        out = spark.createDataFrame([], _BATCH_SCHEMA)
+    else:
+        out = spark.createDataFrame(pdf_out).select("query_id", "node_id", "score")
+    return PPRResult(out, it + 1, converged, metrics)
 
 
 def _batch_dataframe(spark, sym, resets_c, damping, tol, max_iter,
                      salt, store, checkpoint_every, resume,
-                     output_nodes=None) -> DataFrame:
+                     output_nodes=None) -> PPRResult:
     """Distributed multi-query PPR: rank state lives in a (query_id,
     node_id, rank) table, supersteps are salted two-stage aggregations
-    keyed by (query_id, dst) — the hub-skew handling of
-    :func:`_run_dataframe` with the query id folded into the key.  The
-    driver only ever sees per-query scalar aggregates (L1 delta, dangling
-    mass), never the rank table."""
+    keyed by (query_id, dst) so hub destinations never concentrate in one
+    shuffle partition.  The driver only ever sees per-query scalar
+    aggregates (L1 delta, dangling mass), never the rank table."""
+    ckpt, start_it = _resume_ranks(spark, store, resume)
     endpoints = sym.select(F.col("src").alias("node_id")).distinct()
     universe = endpoints.unionByName(resets_c.select("node_id")).distinct().persist()
 
@@ -398,24 +399,22 @@ def _batch_dataframe(spark, sym, resets_c, damping, tol, max_iter,
         .repartition(F.col("src"))
         .persist()
     )
-    norm.count()
+    n_edges = norm.count()
     dangling_ids = (
         universe.join(outw.where(F.col("out_w") > 0).select(F.col("src").alias("node_id")),
                       "node_id", "left_anti")
         .persist()
     )
 
-    ranks = R.select("query_id", "node_id", F.col("reset_w").alias("rank"))
-    start_it = 0
-    if resume and store is not None and store.latest_step() is not None:
-        step = store.latest_step()
-        ranks, _m = store.read(spark, step)
-        ranks = ranks.select("query_id", "node_id", "rank")
-        start_it = step + 1
+    ranks = ckpt if ckpt is not None else R.select(
+        "query_id", "node_id", F.col("reset_w").alias("rank"))
     ranks = ranks.persist()
 
+    metrics: list[dict] = []
     converged = False
+    it = start_it - 1
     for it in range(start_it, max_iter):
+        t0 = time.time()
         contrib = (
             norm.join(ranks.withColumnRenamed("node_id", "src"), "src")
             .select("query_id", "dst", "salt", (F.col("rank") * F.col("wn")).alias("c"))
@@ -457,9 +456,10 @@ def _batch_dataframe(spark, sym, resets_c, damping, tol, max_iter,
         delta = float(delta_row or 0.0)
         ranks.unpersist()
         ranks = new.select("query_id", "node_id", "rank").persist()
+        m = _step_metrics(it, "dataframe", delta, t0, n_edges)
+        metrics.append(m)
         if store is not None and (it % checkpoint_every == 0 or delta < tol):
-            store.write(it, ranks, {"superstep": it, "l1_delta": delta,
-                                    "mode": "dataframe_batch"})
+            store.write(it, ranks, m)
         if delta < tol:
             converged = True
             break
@@ -494,12 +494,12 @@ def _batch_dataframe(spark, sym, resets_c, damping, tol, max_iter,
     norm.unpersist()
     dangling_ids.unpersist()
     R.unpersist()
-    return out
+    return PPRResult(out, it + 1, converged, metrics)
 
 
 def _batch_blocks(spark, edges, sym, resets_c, damping, tol, max_iter,
                   output_nodes=None, n_blocks=None, blocks_dir=None,
-                  query_chunk=32) -> DataFrame:
+                  query_chunk=32) -> PPRResult:
     """Multi-reset CSR-blocks batch PPR (VERDICT r4 next-round #5): the
     :func:`ppr_from_blocks` kernel generalized to a RANK MATRIX.
 
@@ -521,7 +521,9 @@ def _batch_blocks(spark, edges, sym, resets_c, damping, tol, max_iter,
     identical to :func:`_batch_dataframe` (same clamp/normalize/dangling/
     damping/L1 math; parity-tested at 1e-12 in
     ``tests/test_ppr_batch_blocks.py``), including the sparse/dense
-    ``output_nodes`` contract.
+    ``output_nodes`` contract.  ``iterations`` is the longest chunk's
+    superstep count and ``converged`` holds when every chunk converged;
+    the metrics list runs chunk after chunk.  Not resumable.
     """
     import os as _os
     import shutil as _shutil
@@ -612,6 +614,8 @@ def _batch_blocks(spark, edges, sym, resets_c, damping, tol, max_iter,
             ), dtype=np.int64)
 
         out_frames: list[pd.DataFrame] = []
+        metrics: list[dict] = []
+        iterations, converged = 0, True
         for c0 in range(0, len(qids), max(int(query_chunk), 1)):
             chunk = qids[c0:c0 + max(int(query_chunk), 1)]
             qc = len(chunk)
@@ -626,7 +630,9 @@ def _batch_blocks(spark, edges, sym, resets_c, damping, tol, max_iter,
                 RTi[:, perm] = RT
                 RT = RTi
             ranks = RT.copy()
-            for _ in range(max_iter):
+            it, delta = -1, float("inf")
+            for it in range(max_iter):
+                t0 = time.time()
                 bc = sc.broadcast(ranks)
 
                 def step_fn(bids, _bc=bc, _files=block_files, _cols=cols,
@@ -662,8 +668,12 @@ def _batch_blocks(spark, edges, sym, resets_c, damping, tol, max_iter,
                        + (1.0 - damping) * RT)
                 delta = float(np.abs(new - ranks).sum(axis=1).max())
                 ranks = new
+                metrics.append(_step_metrics(it, "blocks", delta, t0,
+                                             ctx["n_edges"]))
                 if delta < tol:
                     break
+            iterations = max(iterations, it + 1)
+            converged = converged and delta < tol
             scores = ranks[:, perm] if perm is not None else ranks
             for j, q in enumerate(chunk):
                 sj = scores[j]
@@ -678,8 +688,8 @@ def _batch_blocks(spark, edges, sym, resets_c, damping, tol, max_iter,
                          "score": sj}))
 
         if not out_frames or not sum(len(f) for f in out_frames):
-            return spark.createDataFrame(
-                [], "query_id string, node_id string, score double")
+            return PPRResult(spark.createDataFrame([], _BATCH_SCHEMA),
+                             iterations, converged, metrics)
         allpdf = pd.concat(out_frames, ignore_index=True)
         sdf = spark.createDataFrame(allpdf)
         out = (
@@ -690,7 +700,7 @@ def _batch_blocks(spark, edges, sym, resets_c, damping, tol, max_iter,
         # the temp layout is deleted (the result is lazy otherwise)
         if made_tmp:
             out = out.localCheckpoint(eager=True)
-        return out
+        return PPRResult(out, iterations, converged, metrics)
     finally:
         if made_tmp:
             _shutil.rmtree(blocks_dir, ignore_errors=True)
@@ -916,9 +926,9 @@ def prepare_csr_blocks(
     driver is comfortable to ~10^9 nodes and runs out around 3-4×10^9;
     the multi-reset :func:`_batch_blocks` additionally holds an
     O(V × query_chunk) rank matrix per chunk, so divide the headroom by
-    the chunk width.  Past that, :func:`_run_dataframe` /
-    :func:`_batch_dataframe` keep ALL state distributed (the driver sees
-    only per-superstep scalar aggregates) and are the no-driver-state
+    the chunk width.  Past that, the ``dataframe`` backend
+    (:func:`_batch_dataframe`) keeps ALL state distributed (the driver sees
+    only per-superstep scalar aggregates) and is the no-driver-state
     alternative at any node count.
     """
     import json as _json
@@ -1730,268 +1740,3 @@ def _batched_loop(spark, sc, store, metrics, ranks, start_it, max_iter, converge
         _shutil.rmtree(bdir, ignore_errors=True)
 
     return it, ranks, converged
-
-
-# --------------------------------------------------------------------------
-# Driver-local small-graph fast path (same math, one collect)
-# --------------------------------------------------------------------------
-
-def _run_local(spark, sym, nodes, damping, tol, max_iter,
-               store, checkpoint_every, resume) -> PPRResult:
-    """Small graphs (≤ ``local_edge_limit`` symmetrized edges): collect the
-    normalized CSR arrays once and run the identical update loop in numpy.
-    Per-superstep Spark job-launch overhead would dominate at this size
-    (SURVEY.md §7 'hard parts'); semantics are byte-identical to the
-    distributed paths (tested cross-mode)."""
-    npdf = nodes.select("node_id", "reset_w", "is_dangling").orderBy("node_id").toPandas()
-    node_ids = npdf["node_id"].to_numpy()
-    pos = {k: i for i, k in enumerate(node_ids)}
-    n = len(node_ids)
-    r_reset = npdf["reset_w"].to_numpy(dtype=np.float64)
-    dangling = npdf["is_dangling"].to_numpy(dtype=bool)
-
-    epdf = sym.toPandas()
-    out_w = np.zeros(n, dtype=np.float64)
-    src_i = epdf["src"].map(pos).to_numpy(dtype=np.int64)
-    dst_i = epdf["dst"].map(pos).to_numpy(dtype=np.int64)
-    wts = epdf["weight"].to_numpy(dtype=np.float64)
-    np.add.at(out_w, src_i, wts)
-    keep = out_w[src_i] > 0
-    src_i, dst_i = src_i[keep], dst_i[keep]
-    wn = wts[keep] / out_w[src_i]
-
-    ranks = r_reset.copy()
-    start_it = 0
-    if resume and store is not None and store.latest_step() is not None:
-        step = store.latest_step()
-        rdf, _m = store.read(spark, step)
-        rpdf = rdf.toPandas()
-        ranks = np.zeros(n, dtype=np.float64)
-        ranks[rpdf["idx"].to_numpy()] = rpdf["rank"].to_numpy(dtype=np.float64)
-        start_it = step + 1
-
-    metrics: list[dict] = []
-    converged = False
-    it = start_it
-    for it in range(start_it, max_iter):
-        t0 = time.time()
-        contrib = np.bincount(dst_i, weights=ranks[src_i] * wn, minlength=n)
-        dm = float(ranks[dangling].sum())
-        new = damping * (contrib + dm * r_reset) + (1.0 - damping) * r_reset
-        delta = float(np.abs(new - ranks).sum())
-        ranks = new
-        m = {"superstep": it, "l1_delta": delta, "dangling_mass": dm,
-             "edges_processed": int(len(src_i)), "wall_ms": (time.time() - t0) * 1000,
-             "mode": "local"}
-        metrics.append(m)
-        if store is not None and (it % checkpoint_every == 0 or delta < tol):
-            rdf = spark.createDataFrame(
-                pd.DataFrame({"idx": np.arange(n, dtype=np.int64), "rank": ranks})
-            )
-            store.write(it, rdf, m)
-        if delta < tol:
-            converged = True
-            break
-
-    out = spark.createDataFrame(pd.DataFrame({"node_id": node_ids, "score": ranks}))
-    return PPRResult(out.select("node_id", "score"), it + 1, converged, metrics)
-
-
-# --------------------------------------------------------------------------
-# CSR-blocked Arrow-kernel path
-# --------------------------------------------------------------------------
-
-def _run_csr(spark, sym, nodes, n, damping, tol, max_iter,
-             n_blocks, store, checkpoint_every, resume) -> PPRResult:
-    sc = spark.sparkContext
-    n_blocks = n_blocks or max(sc.defaultParallelism * 2, 8)
-
-    # Deterministic dense int index: nodes ordered by id.  A global window
-    # is acceptable here because csr mode is gated at csr_node_limit; the
-    # dataframe path keeps string ids with no global ordering.
-    w = Window.orderBy("node_id")
-    idx = nodes.select("node_id", "reset_w", "is_dangling").withColumn(
-        "idx", F.row_number().over(w) - 1
-    )
-    idx_pdf = idx.orderBy("idx").toPandas()
-    node_ids = idx_pdf["node_id"].to_numpy()
-    r_reset = idx_pdf["reset_w"].to_numpy(dtype=np.float64)
-    dangling = idx_pdf["is_dangling"].to_numpy(dtype=bool)
-
-    id_map = idx.select("node_id", "idx")
-    outw = sym.groupBy("src").agg(F.sum("weight").alias("out_w"))
-    norm = (
-        sym.join(outw.where(F.col("out_w") > 0), "src")
-        .join(id_map.withColumnRenamed("node_id", "src").withColumnRenamed("idx", "src_idx"), "src")
-        .join(id_map.withColumnRenamed("node_id", "dst").withColumnRenamed("idx", "dst_idx"), "dst")
-        .select(
-            F.col("src_idx").cast("long").alias("src_idx"),
-            F.col("dst_idx").cast("long").alias("dst_idx"),
-            (F.col("weight") / F.col("out_w")).alias("wn"),
-            F.pmod(F.col("src_idx"), F.lit(n_blocks)).cast("int").alias("block"),
-        )
-        .repartition(n_blocks, "block")
-        .persist()
-    )
-    n_edges = norm.count()
-    block_sizes = {r["block"]: r["cnt"] for r in norm.groupBy("block").agg(F.count(F.lit(1)).alias("cnt")).collect()}
-
-    start_it = 0
-    ranks = r_reset.copy()
-    if resume and store is not None and store.latest_step() is not None:
-        step = store.latest_step()
-        rdf, _m = store.read(spark, step)
-        rpdf = rdf.orderBy("idx").toPandas()
-        ranks = np.zeros(n, dtype=np.float64)
-        ranks[rpdf["idx"].to_numpy()] = rpdf["rank"].to_numpy(dtype=np.float64)
-        start_it = step + 1
-
-    metrics: list[dict] = []
-    converged = False
-    it = start_it
-    for it in range(start_it, max_iter):
-        t0 = time.time()
-        bc = sc.broadcast(ranks)
-
-        def step_fn(batches, _bc=bc, _n=n):
-            tot = None
-            rows = 0
-            for pdf in batches:
-                r = _bc.value
-                contrib = r[pdf["src_idx"].to_numpy()] * pdf["wn"].to_numpy()
-                c = np.bincount(pdf["dst_idx"].to_numpy(), weights=contrib, minlength=_n)
-                tot = c if tot is None else tot + c
-                rows += len(pdf)
-            if tot is not None:
-                nz = np.flatnonzero(tot)
-                yield pd.DataFrame({"dst_idx": nz.astype(np.int64), "c": tot[nz]})
-
-        partials = norm.mapInPandas(step_fn, schema="dst_idx long, c double")
-        agg = partials.groupBy("dst_idx").agg(F.sum("c").alias("c")).toPandas()
-        contrib = np.zeros(n, dtype=np.float64)
-        if len(agg):
-            contrib[agg["dst_idx"].to_numpy()] = agg["c"].to_numpy(dtype=np.float64)
-        bc.destroy()
-
-        dm = float(ranks[dangling].sum())
-        new = damping * (contrib + dm * r_reset) + (1.0 - damping) * r_reset
-        delta = float(np.abs(new - ranks).sum())
-        ranks = new
-        m = {
-            "superstep": it,
-            "l1_delta": delta,
-            "dangling_mass": dm,
-            "edges_processed": int(n_edges),
-            "wall_ms": (time.time() - t0) * 1000,
-            "mode": "csr",
-        }
-        metrics.append(m)
-        if store is not None and (it % checkpoint_every == 0 or delta < tol):
-            rdf = spark.createDataFrame(
-                pd.DataFrame({"idx": np.arange(n, dtype=np.int64), "rank": ranks})
-            )
-            parts = [{"partition": int(b), "edges": int(c)} for b, c in sorted(block_sizes.items())]
-            store.write(it, rdf, m, parts)
-        if delta < tol:
-            converged = True
-            break
-
-    norm.unpersist()
-    out = spark.createDataFrame(pd.DataFrame({"node_id": node_ids, "score": ranks}))
-    return PPRResult(out.select("node_id", "score"), it + 1, converged, metrics)
-
-
-# --------------------------------------------------------------------------
-# Pure-DataFrame path (state never leaves the cluster)
-# --------------------------------------------------------------------------
-
-def _run_dataframe(spark, sym, nodes, damping, tol, max_iter,
-                   salt, store, checkpoint_every, resume) -> PPRResult:
-    outw = sym.groupBy("src").agg(F.sum("weight").alias("out_w"))
-    norm = (
-        sym.join(outw.where(F.col("out_w") > 0), "src")
-        .select(
-            "src",
-            "dst",
-            (F.col("weight") / F.col("out_w")).alias("wn"),
-            # salt for the explicit two-stage hub aggregation
-            F.pmod(F.xxhash64("src"), F.lit(salt)).alias("salt"),
-        )
-        .repartition(F.col("src"))
-        .persist()
-    )
-    n_edges = norm.count()
-
-    nodes = nodes.persist()
-    ranks = nodes.select("node_id", F.col("reset_w").alias("rank"))
-    start_it = 0
-    if resume and store is not None and store.latest_step() is not None:
-        step = store.latest_step()
-        ranks, _m = store.read(spark, step)
-        ranks = ranks.select("node_id", "rank")
-        start_it = step + 1
-
-    ranks = ranks.persist()
-    dm = (
-        ranks.join(nodes.where("is_dangling").select("node_id"), "node_id", "left_semi")
-        .agg(F.coalesce(F.sum("rank"), F.lit(0.0)))
-        .collect()[0][0]
-    )
-
-    metrics: list[dict] = []
-    converged = False
-    it = start_it
-    for it in range(start_it, max_iter):
-        t0 = time.time()
-        # contrib: rank mass pushed along normalized edges; rank side is the
-        # small one — Spark broadcasts it under the threshold, else shuffles
-        # on src which matches norm's persisted partitioning (no edge shuffle).
-        contrib = (
-            norm.join(ranks.withColumnRenamed("node_id", "src"), "src")
-            .select("dst", "salt", (F.col("rank") * F.col("wn")).alias("c"))
-            .groupBy("dst", "salt")            # stage 1: salted partial sums
-            .agg(F.sum("c").alias("c"))
-            .groupBy("dst")                    # stage 2: final per-dst sum
-            .agg(F.sum("c").alias("c"))
-        )
-        new = (
-            nodes.join(contrib.withColumnRenamed("dst", "node_id"), "node_id", "left")
-            .select(
-                "node_id",
-                "is_dangling",
-                (
-                    F.lit(damping)
-                    * (F.coalesce(F.col("c"), F.lit(0.0)) + F.lit(dm) * F.col("reset_w"))
-                    + F.lit(1.0 - damping) * F.col("reset_w")
-                ).alias("rank"),
-            )
-        )
-        new = new.localCheckpoint(eager=True)
-        row = (
-            new.join(ranks.select("node_id", F.col("rank").alias("old_rank")), "node_id")
-            .agg(
-                F.sum(F.abs(F.col("rank") - F.col("old_rank"))).alias("delta"),
-                F.sum(F.when(F.col("is_dangling"), F.col("rank")).otherwise(F.lit(0.0))).alias("dm"),
-            )
-            .collect()[0]
-        )
-        delta, dm = float(row["delta"]), float(row["dm"] or 0.0)
-        ranks.unpersist()
-        ranks = new.select("node_id", "rank").persist()
-        m = {
-            "superstep": it,
-            "l1_delta": delta,
-            "dangling_mass": dm,
-            "edges_processed": int(n_edges),
-            "wall_ms": (time.time() - t0) * 1000,
-            "mode": "dataframe",
-        }
-        metrics.append(m)
-        if store is not None and (it % checkpoint_every == 0 or delta < tol):
-            store.write(it, ranks, m)
-        if delta < tol:
-            converged = True
-            break
-
-    norm.unpersist()
-    return PPRResult(ranks.select("node_id", F.col("rank").alias("score")), it + 1, converged, metrics)

@@ -1,17 +1,25 @@
-"""PPR oracle tests (FIXTURES.md §4/§6): every physical mode vs the exact
-dense-solve oracle, on graphs covering parallel edges, dangling vertices,
-disconnected components, NaN/negative reset weights, zero-weight rows and
-hub skew — allclose(atol=1e-6), the north_rule criterion.
+"""PPR oracle tests (FIXTURES.md §4/§6): the single-query entry point
+(|Q| = 1 over the batch router) vs the exact dense-solve oracle, on graphs
+covering parallel edges, dangling vertices, disconnected components,
+NaN/negative reset weights, zero-weight rows and hub skew —
+allclose(atol=1e-6), the north_rule criterion.
 
-The local mode (identical math, driver numpy) runs the full matrix; the
-distributed csr/dataframe paths run a reduced matrix (Spark job-launch
-overhead per superstep) plus a cross-mode equivalence test on a larger
-seeded graph."""
+The local backend (driver numpy) runs every graph at both dampings; the
+distributed dataframe backend runs every graph at one damping (Spark
+job-launch overhead per superstep), reached through its ``'csr'`` alias,
+plus a cross-mode equivalence test on a larger seeded graph.  The batch
+tests pin the local and dataframe backends against each other and against
+per-query single runs, including checkpoints written by one backend and
+resumed by the other, and the checkpoint/routing rules of the blocks
+backend."""
+
+import itertools
 
 import numpy as np
 import pytest
 
-from hipporag_spark.ppr import personalized_pagerank
+from hipporag_spark.checkpoint import CheckpointStore
+from hipporag_spark.ppr import personalized_pagerank, personalized_pagerank_batch
 from tests.reference_impl import ppr_exact
 
 # (name, directed edge rows (src,dst,weight), reset dict)
@@ -83,12 +91,6 @@ def test_csr_mode_matches_exact_solve(spark, name, rows, reset):
     _check(got, rows, reset, 0.5)
 
 
-@pytest.mark.parametrize("name,rows,reset", GRAPHS[:2], ids=_IDS[:2])
-def test_dataframe_mode_matches_exact_solve(spark, name, rows, reset):
-    got = _run(spark, rows, reset, 0.5, "dataframe")
-    _check(got, rows, reset, 0.5)
-
-
 def _random_graph(n_nodes=120, n_edges=600, seed=7):
     rng = np.random.default_rng(seed)
     rows = []
@@ -107,14 +109,14 @@ def test_modes_agree_on_random_graph(spark, mode):
     _check(got, rows, reset, 0.85)
 
 
-def test_reset_all_zero_raises(spark):
+@pytest.mark.parametrize("reset_rows", [[("a", float("nan"))], []],
+                         ids=["all_nan", "empty"])
+def test_reset_all_zero_raises(spark, reset_rows):
     edges = spark.createDataFrame(
         [("a", "b", 1.0, "fact")], "src string, dst string, weight double, relation string"
     )
-    rdf = spark.createDataFrame(
-        [("a", float("nan"))], "node_id string, reset_weight double"
-    )
-    with pytest.raises(Exception):
+    rdf = spark.createDataFrame(reset_rows, "node_id string, reset_weight double")
+    with pytest.raises(ValueError):
         personalized_pagerank(spark, edges, rdf, mode="local")
 
 
@@ -165,22 +167,86 @@ def test_batch_matches_single_query_runs(spark):
 
 
 def test_batch_dataframe_checkpoint_resume(spark, tmp_path):
-    from hipporag_spark.ppr import personalized_pagerank_batch
-
-    _, edges, _, rdf = _batch_inputs(spark)
-    ckpt = str(tmp_path / "batch_ckpt")
-    # truncated run leaves a checkpoint behind
-    personalized_pagerank_batch(spark, edges, rdf, damping=0.5, tol=1e-12,
-                                mode="dataframe", max_iter=6,
-                                checkpoint_dir=ckpt, checkpoint_every=2)
-    resumed = personalized_pagerank_batch(spark, edges, rdf, damping=0.5, tol=1e-12,
-                                          mode="dataframe",
-                                          checkpoint_dir=ckpt, resume=True)
-    full = personalized_pagerank_batch(spark, edges, rdf, damping=0.5, tol=1e-12, mode="local")
-    rp = {(r["query_id"], r["node_id"]): r["score"] for r in resumed.collect()}
+    """A truncated run's checkpoint resumes to the uninterrupted result at
+    1e-10 whichever of the local and dataframe backends wrote it and
+    whichever resumes it — and through the single-query entry point."""
+    rows, edges, resets, rdf = _batch_inputs(spark)
+    kw = dict(damping=0.5, tol=1e-12)
+    full = personalized_pagerank_batch(spark, edges, rdf, mode="local", **kw)
     fp = {(r["query_id"], r["node_id"]): r["score"] for r in full.collect()}
-    for kk in fp:
-        assert abs(rp[kk] - fp[kk]) < 1e-10, kk
+    for first, then in itertools.product(("local", "dataframe"), repeat=2):
+        ckpt = str(tmp_path / f"batch_{first}_{then}")
+        # truncated run leaves a checkpoint behind
+        personalized_pagerank_batch(spark, edges, rdf, mode=first, max_iter=6,
+                                    checkpoint_dir=ckpt, checkpoint_every=2, **kw)
+        resumed = personalized_pagerank_batch(spark, edges, rdf, mode=then,
+                                              checkpoint_dir=ckpt, resume=True, **kw)
+        rp = {(r["query_id"], r["node_id"]): r["score"] for r in resumed.collect()}
+        assert set(rp) == set(fp), (first, then)
+        for kk in fp:
+            assert abs(rp[kk] - fp[kk]) < 1e-10, (first, then, kk)
+
+    reset = resets["q3"]
+    single_rdf = spark.createDataFrame(list(reset.items()),
+                                       "node_id string, reset_weight double")
+    want = _run(spark, rows, reset, 0.5, "local", tol=1e-12)
+    ckpt = str(tmp_path / "single")
+    personalized_pagerank(spark, edges, single_rdf, mode="dataframe", max_iter=6,
+                          checkpoint_dir=ckpt, **kw)
+    res = personalized_pagerank(spark, edges, single_rdf, mode="local",
+                                checkpoint_dir=ckpt, resume=True, **kw)
+    assert res.converged
+    assert res.metrics[0]["superstep"] == 6  # picked up after step 5
+    got = {r["node_id"]: r["score"] for r in res.ranks.collect()}
+    assert set(got) == set(want)
+    for node in want:
+        assert abs(got[node] - want[node]) < 1e-10, node
+
+
+def test_resume_rejects_pre_batch_checkpoint(spark, tmp_path):
+    """Single-query checkpoints of the old (idx, rank) format fail fast
+    with the fix in the message instead of being misread."""
+    _, edges, _, _ = _batch_inputs(spark)
+    ckpt = str(tmp_path / "old_format")
+    CheckpointStore(ckpt).write(
+        3, spark.createDataFrame([(0, 0.5), (1, 0.5)], "idx long, rank double"),
+        {"superstep": 3})
+    rdf = spark.createDataFrame([("n000", 1.0)], "node_id string, reset_weight double")
+    for mode in ("local", "dataframe"):
+        with pytest.raises(ValueError, match="fresh checkpoint_dir"):
+            personalized_pagerank(spark, edges, rdf, mode=mode,
+                                  checkpoint_dir=ckpt, resume=True)
+
+
+def test_pinned_blocks_mode_rejects_checkpoint_dir(spark, tmp_path):
+    """blocks does not checkpoint: pinning it with a checkpoint_dir raises
+    before any layout work instead of silently running unresumable."""
+    _, edges, _, rdf = _batch_inputs(spark)
+    with pytest.raises(ValueError, match="does not checkpoint"):
+        personalized_pagerank_batch(
+            spark, edges, rdf, mode="blocks", blocks_edge_limit=0,
+            checkpoint_dir=str(tmp_path / "ckpt"), blocks_dir=str(tmp_path / "blocks"))
+    assert not (tmp_path / "blocks").exists()
+    assert not (tmp_path / "ckpt").exists()
+
+
+def test_auto_routes_checkpointed_run_to_dataframe(spark, tmp_path):
+    """Above blocks_edge_limit, auto keeps a checkpointed run on the
+    resumable dataframe backend rather than blocks."""
+    _, edges, _, rdf = _batch_inputs(spark)
+    kw = dict(damping=0.5, tol=1e-12)
+    ckpt = str(tmp_path / "ckpt")
+    got = personalized_pagerank_batch(
+        spark, edges, rdf, mode="auto", local_edge_limit=0, blocks_edge_limit=0,
+        checkpoint_dir=ckpt, blocks_dir=str(tmp_path / "blocks"), **kw)
+    gp = {(r["query_id"], r["node_id"]): r["score"] for r in got.collect()}
+    assert not (tmp_path / "blocks").exists()
+    assert CheckpointStore(ckpt).lineage()[-1]["metrics"]["mode"] == "dataframe"
+    want = personalized_pagerank_batch(spark, edges, rdf, mode="local", **kw)
+    wp = {(r["query_id"], r["node_id"]): r["score"] for r in want.collect()}
+    assert set(gp) == set(wp)
+    for kk in wp:
+        assert abs(gp[kk] - wp[kk]) < 1e-10, kk
 
 
 def test_global_pagerank_uniform_reset(spark):
