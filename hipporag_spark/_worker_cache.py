@@ -60,12 +60,11 @@ def _scratch(name: str, dtype) -> "np.ndarray":
     return buf
 
 
-def block_contrib(si, dloc, ranks, edge_scale, loc_len, per_node: bool) -> "np.ndarray":
+def block_contrib(si, dloc, ranks, edge_scale, loc_len) -> "np.ndarray":
     """One block's contribution slice: ``Σ ranks[src]·scale per local dst``.
 
-    ``per_node=True``: ``edge_scale`` is a per-NODE array (1/out_w, indexed
-    by src — the unit-weight layout); else per-EDGE (wn, aligned with si);
-    ``edge_scale=None``: the caller pre-folded the scale into ``ranks``
+    ``edge_scale``: per-EDGE scale (wn, aligned with si), or None when
+    the caller pre-folded the scale into ``ranks``
     (``rs = ranks * inv_w`` once per superstep — bitwise identical to the
     per-edge product, and it removes the second gather, which dominates
     the kernel).  Chunked with persistent scratch buffers: fresh
@@ -76,7 +75,6 @@ def block_contrib(si, dloc, ranks, edge_scale, loc_len, per_node: bool) -> "np.n
     """
     c = np.zeros(loc_len, dtype=np.float64)
     w = _scratch("w", np.float64)
-    w2 = _scratch("w2", np.float64)
     dl = _scratch("dl", np.int64)
     m = len(si)
     for a in range(0, m, _CHUNK):
@@ -84,11 +82,7 @@ def block_contrib(si, dloc, ranks, edge_scale, loc_len, per_node: bool) -> "np.n
         k = b - a
         np.take(ranks, si[a:b], out=w[:k])
         if edge_scale is not None:
-            if per_node:
-                np.take(edge_scale, si[a:b], out=w2[:k])
-                w[:k] *= w2[:k]
-            else:
-                w[:k] *= edge_scale[a:b]
+            w[:k] *= edge_scale[a:b]
         # cast-copy the (possibly uint16) local dst index into a reused
         # int64 buffer: bincount would otherwise allocate its own copy
         dl[:k] = dloc[a:b]

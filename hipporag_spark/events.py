@@ -146,6 +146,12 @@ def sessionize_stream(events: DataFrame, gap_minutes: int = 30,
     ``session_seq`` is deliberately absent from the streaming output: a
     stream cannot know a user's historical session count without
     unbounded state; join on ``(user_id, session_start)`` instead.
+
+    State format: the per-user state is the parallel arrays of
+    ``_STATE_SCHEMA``, one entry per held interval.  Checkpoints written
+    by the earlier single-interval version, whose state was scalar
+    columns, cannot be resumed: restart such a stream with a fresh
+    ``checkpointLocation``.
     """
     gap_us = int(gap_minutes) * 60 * 1_000_000
 

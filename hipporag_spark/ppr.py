@@ -39,23 +39,24 @@ resets and, for ``mode='auto'``, counts symmetrized edges to pick:
     O(n_nodes) lands on the driver — the no-driver-state path at any scale.
 
 ``mode='blocks'`` (auto above ``blocks_edge_limit`` symmetrized edges)
-    One-time :func:`prepare_csr_blocks` layout, then the CSR block kernel
-    of :func:`ppr_from_blocks` run as a rank-matrix superstep,
-    ``query_chunk`` queries per Spark job.
+    One-time :func:`prepare_csr_blocks` layout, then the one CSR-block
+    driver :func:`_blocks_run` over a rank matrix of ``query_chunk``
+    queries, ``checkpoint_every`` supersteps per gang-scheduled barrier
+    job.
 
-``local`` and ``dataframe`` checkpoint the same ``(query_id, node_id,
-rank)`` table through :class:`hipporag_spark.checkpoint.CheckpointStore`
-and resume mid-iteration from each other's checkpoints (``resume=True``).
-``blocks`` does not checkpoint: auto keeps checkpointed runs on
-``dataframe`` and a pinned ``mode='blocks'`` with ``checkpoint_dir``
-raises.  Every backend reports one metrics record per superstep:
-``superstep``, ``mode``, ``l1_delta`` (max over queries), ``wall_ms``,
+Every backend checkpoints the same ``(query_id, node_id, rank)`` table
+through :class:`hipporag_spark.checkpoint.CheckpointStore` and resumes
+mid-iteration from any backend's checkpoint (``resume=True``).  Every
+backend reports one metrics record per superstep: ``superstep``,
+``mode``, ``l1_delta`` (max over queries), ``wall_ms``,
 ``edges_processed``.
 
-The CSR-block paths :func:`ppr_from_blocks` / :func:`ppr_from_blocks_batched`
-over :func:`prepare_csr_blocks` layouts are the throughput/benchmark path,
-with the round-2 "relabeled" identity-permutation layout (contiguous
-per-task slices, single-gather folded kernel).
+:func:`ppr_from_blocks` is the |Q| = 1 entry to the same block driver
+over a caller-built :func:`prepare_csr_blocks` layout — the scaling
+gate's path, so the gate benchmarks the production kernel.  There is one
+block layout, "relabeled": destinations packed into degree-balanced
+blocks (hub LPT), nodes renumbered so each block owns a contiguous id
+span (per-task slices are memcpy spans, single-gather folded kernel).
 """
 
 from __future__ import annotations
@@ -165,16 +166,16 @@ def personalized_pagerank_batch(
     Backends (module docstring): ``'local'`` (auto at ≤
     ``local_edge_limit`` symmetrized edges), ``'dataframe'`` (auto between
     the limits; ``'csr'`` is accepted as an alias) and ``'blocks'`` (auto
-    above ``blocks_edge_limit`` — default 10^8, VERDICT r4 next-round #5 —
-    unless ``checkpoint_dir`` is set, which keeps the run on
-    ``'dataframe'``).  ``'blocks'`` lays the graph out once under
-    ``blocks_dir`` (a temp dir when None) and runs ``query_chunk`` query
-    columns per superstep job; its driver memory is O(n_nodes ×
-    query_chunk) floats per chunk plus the O(n_nodes) perm/dangling
-    sidecars — at 10^8 nodes the default chunk of 32 is ~26 GB, so size
-    ``query_chunk`` to the driver (see the capacity note on
-    :func:`prepare_csr_blocks`).  It is not resumable: pinning it with a
-    ``checkpoint_dir`` raises ``ValueError``.
+    above ``blocks_edge_limit`` — default 10^8, VERDICT r4 next-round #5).
+    ``'blocks'`` lays the graph out once under ``blocks_dir`` (a temp dir
+    when None) and runs ``query_chunk`` queries at a time; there
+    ``checkpoint_every`` is the number of supersteps per barrier job, and
+    a checkpoint lands at every job boundary.  Its driver memory is
+    O(n_nodes × query_chunk) floats per chunk plus the O(n_nodes)
+    perm/dangling sidecars — at 10^8 nodes the default chunk of 32 is
+    ~26 GB, so size ``query_chunk`` to the driver (see the capacity note
+    on :func:`prepare_csr_blocks`).  Every mode checkpoints to
+    ``checkpoint_dir`` and resumes from any mode's checkpoint.
 
     ``output_nodes`` (VERDICT r3 "What's wrong" #2): the default output
     is DENSE — one row per (universe node × query), the reference's
@@ -205,10 +206,6 @@ def _ppr(spark, edges, resets, damping, tol, max_iter, mode,
     """The PPR router: clamp the ``(query_id, node_id, reset_weight)``
     resets, pick a backend, run it.  ``ranks`` of the result is
     ``(query_id, node_id, score)``; None when there are no reset rows."""
-    if mode == "blocks" and checkpoint_dir:
-        raise ValueError(
-            "mode='blocks' does not checkpoint; use mode='dataframe' for a "
-            "resumable run, or drop checkpoint_dir")
     sym = symmetrize(edges).persist()
     w = F.col("reset_weight").cast("double")
     resets_c = resets.select(
@@ -226,7 +223,7 @@ def _ppr(spark, edges, resets, damping, tol, max_iter, mode,
         n_edges = sym.count()
         if n_edges <= local_edge_limit:
             mode = "local"
-        elif n_edges > blocks_edge_limit and not checkpoint_dir:
+        elif n_edges > blocks_edge_limit:
             mode = "blocks"
         else:
             mode = "dataframe"
@@ -239,8 +236,8 @@ def _ppr(spark, edges, resets, damping, tol, max_iter, mode,
                            store, checkpoint_every, resume, output_nodes)
     elif mode == "blocks":
         res = _batch_blocks(spark, edges, sym, resets_c, damping, tol,
-                            max_iter, output_nodes, n_blocks, blocks_dir,
-                            query_chunk)
+                            max_iter, store, checkpoint_every, resume,
+                            output_nodes, n_blocks, blocks_dir, query_chunk)
     else:
         res = _batch_dataframe(spark, sym, resets_c, damping, tol, max_iter,
                                salt, store, checkpoint_every, resume,
@@ -258,8 +255,8 @@ def _step_metrics(it, mode, delta, t0, n_edges) -> dict:
 
 def _resume_ranks(spark, store, resume):
     """``(ranks, start_it)`` from the latest checkpoint — ranks as the
-    ``(query_id, node_id, rank)`` table both checkpointing backends write
-    — or ``(None, 0)`` when there is nothing to resume."""
+    ``(query_id, node_id, rank)`` table every backend writes — or
+    ``(None, 0)`` when there is nothing to resume."""
     step = store.latest_step() if resume and store is not None else None
     if step is None:
         return None, 0
@@ -497,33 +494,36 @@ def _batch_dataframe(spark, sym, resets_c, damping, tol, max_iter,
     return PPRResult(out, it + 1, converged, metrics)
 
 
-def _batch_blocks(spark, edges, sym, resets_c, damping, tol, max_iter,
-                  output_nodes=None, n_blocks=None, blocks_dir=None,
-                  query_chunk=32) -> PPRResult:
+def _batch_blocks(spark, edges, sym, resets_c, damping, tol, max_iter, store,
+                  checkpoint_every, resume, output_nodes=None, n_blocks=None,
+                  blocks_dir=None, query_chunk=32) -> PPRResult:
     """Multi-reset CSR-blocks batch PPR (VERDICT r4 next-round #5): the
-    :func:`ppr_from_blocks` kernel generalized to a RANK MATRIX.
+    block driver :func:`_blocks_run` over ``query_chunk`` query rows at a
+    time.
 
     One-time layout: universe = edge endpoints ∪ reset nodes is densified
-    (range-partition + per-partition offsets, no single-partition window),
-    the relabeled edges go through :func:`prepare_csr_blocks` (reset-only
-    nodes are isolated ids — perm tail positions, zero out-weight, so
-    they are exact dangling vertices).  Then queries run ``query_chunk``
-    columns at a time: each superstep is ONE job whose tasks read their
-    edge blocks once (worker-side cache) and run the per-column
-    ``block_contrib`` bincount kernel for every query in the chunk — the
-    per-superstep edge I/O and scheduling cost is amortized across the
-    whole chunk, where the dataframe mode re-shuffles its
-    ``(query_id, node_id)`` rank table every superstep.
+    by :func:`_densify` and laid out by :func:`prepare_csr_blocks`
+    (reset-only nodes are isolated ids — zero out-weight, so exact
+    dangling vertices).  Each chunk runs ``checkpoint_every`` supersteps
+    per barrier job; a task reads its edge blocks once (worker-side
+    cache) and runs the ``block_contrib`` kernel for every query row, so
+    edge I/O and scheduling are amortized across the chunk, where the
+    dataframe mode re-shuffles its rank table every superstep.
 
-    Driver capacity: O(n_nodes × query_chunk) float64 for the rank/reset
-    matrices per chunk, plus the O(n_nodes) perm/dangling sidecars — see
-    the capacity note on :func:`prepare_csr_blocks`.  Semantics are
-    identical to :func:`_batch_dataframe` (same clamp/normalize/dangling/
-    damping/L1 math; parity-tested at 1e-12 in
-    ``tests/test_ppr_batch_blocks.py``), including the sparse/dense
-    ``output_nodes`` contract.  ``iterations`` is the longest chunk's
-    superstep count and ``converged`` holds when every chunk converged;
-    the metrics list runs chunk after chunk.  Not resumable.
+    Every job boundary checkpoints to ``store`` the ``(query_id,
+    node_id, rank)`` nonzero-cell table the other backends write:
+    finished chunks' final cells plus the running chunk's current cells.
+    On resume each query starts from its checkpointed row, or from its
+    reset when it has none — PPR is a contraction, so any start reaches
+    the same fixed point.  Superstep numbers run on across chunks;
+    ``max_iter`` bounds each chunk, ``iterations`` is the longest chunk's
+    superstep count and ``converged`` holds when every chunk converged.
+
+    Driver capacity: O(n_nodes × query_chunk) float64 per chunk plus the
+    O(n_nodes) perm/dangling sidecars (capacity note on
+    :func:`prepare_csr_blocks`).  Semantics, including the sparse/dense
+    ``output_nodes`` contract, are those of :func:`_batch_dataframe`
+    (parity-tested at 1e-12 in ``tests/test_ppr_batch_blocks.py``).
     """
     import os as _os
     import shutil as _shutil
@@ -536,59 +536,22 @@ def _batch_blocks(spark, edges, sym, resets_c, damping, tol, max_iter,
     bad = [r["query_id"] for r in qsum.where(F.col("s") <= 0).collect()]
     if bad:
         raise ValueError(f"reset vector sums to 0 for queries: {sorted(bad)}")
+    # read before this run's first checkpoint moves LATEST
+    ckpt, g = _resume_ranks(spark, store, resume)
 
     made_tmp = blocks_dir is None
     if made_tmp:
         blocks_dir = _tempfile.mkdtemp(prefix="hipporag_batch_blocks_")
     try:
-        # ---- densify universe = endpoints ∪ reset nodes ----
-        endpoints = sym.select(F.col("src").alias("node_id")).distinct()
-        universe = endpoints.unionByName(
-            resets_c.select("node_id")).distinct()
-        n_parts = max(sc.defaultParallelism, 8)
-        parted = (
-            universe.repartitionByRange(n_parts, "node_id")
-            .sortWithinPartitions("node_id")
-            .withColumn("pid", F.spark_partition_id())
-            .persist()
-        )
-        sizes = {r["pid"]: r["cnt"] for r in parted.groupBy("pid").agg(
-            F.count(F.lit(1)).alias("cnt")).collect()}
-        offsets, acc = {}, 0
-        for p in sorted(sizes):
-            offsets[p] = acc
-            acc += sizes[p]
-        n = acc
-        off_df = spark.createDataFrame(
-            [(p, o) for p, o in offsets.items()], "pid int, off long")
-        wp = Window.partitionBy("pid").orderBy("node_id")
-        idx = (
-            parted.withColumn("rn", F.row_number().over(wp))
-            .join(F.broadcast(off_df), "pid")
-            .select("node_id", (F.col("off") + F.col("rn") - 1).alias("idx"))
-        )
-        id_map_path = _os.path.join(blocks_dir, "batch_id_map")
-        idx.write.mode("overwrite").parquet(id_map_path)
-        parted.unpersist()
-        idx = spark.read.parquet(id_map_path)
-
-        edges_int = (
-            edges.select("src", "dst", "weight")
-            .join(idx.withColumnRenamed("node_id", "src")
-                     .withColumnRenamed("idx", "src_i"), "src")
-            .join(idx.withColumnRenamed("node_id", "dst")
-                     .withColumnRenamed("idx", "dst_i"), "dst")
-            .select(F.col("src_i").alias("src"), F.col("dst_i").alias("dst"),
-                    "weight")
-        )
+        idx, n, edges_int = _densify(
+            spark, edges,
+            sym.select(F.col("src").alias("node_id"))
+            .unionByName(resets_c.select("node_id")),
+            _os.path.join(blocks_dir, "batch_id_map"))
         prepare_csr_blocks(spark, edges_int, blocks_dir, n_blocks, int_ids=n)
-        ctx = _load_blocks_ctx(spark, blocks_dir, None)
-        dangling, perm = ctx["dangling"], ctx["perm"]
-        block_files, cols = ctx["block_files"], ctx["cols"]
-        loc_lens, offs_meta = ctx["loc_lens"], ctx["offs"]
-        npy_dir = ctx["npy_dir"]
-        cache_limit = int(24576 * 1024 * 1024 / max(sc.defaultParallelism, 1))
-        n_tasks = min(n_blocks, sc.defaultParallelism)
+        ctx = _load_blocks_ctx(spark, blocks_dir)
+        perm = ctx["perm"]
+        start = None if ckpt is None else _ckpt_cells(ckpt, idx)
 
         # sparse per-query reset entries with dense idx — O(Σ|reset_q|)
         rrows = (
@@ -614,67 +577,37 @@ def _batch_blocks(spark, edges, sym, resets_c, damping, tol, max_iter,
             ), dtype=np.int64)
 
         out_frames: list[pd.DataFrame] = []
+        done: list[pd.DataFrame] = []  # finished chunks' checkpoint cells
         metrics: list[dict] = []
         iterations, converged = 0, True
-        for c0 in range(0, len(qids), max(int(query_chunk), 1)):
-            chunk = qids[c0:c0 + max(int(query_chunk), 1)]
-            qc = len(chunk)
-            # reset matrix, transposed (qc, n) so each query row is
-            # C-contiguous for the kernel's np.take gather
-            RT = np.zeros((qc, n), dtype=np.float64)
+        width = max(int(query_chunk), 1)
+        for c0 in range(0, len(qids), width):
+            chunk = qids[c0:c0 + width]
+            # reset matrix (qc, n), original → internal numbering; each
+            # query row is C-contiguous for the kernel's np.take gather
+            R0 = np.zeros((len(chunk), n), dtype=np.float64)
             for j, q in enumerate(chunk):
                 for i, w in per_q[q]:
-                    RT[j, i] += w
-            if perm is not None:  # original → internal numbering
-                RTi = np.zeros_like(RT)
-                RTi[:, perm] = RT
-                RT = RTi
-            ranks = RT.copy()
-            it, delta = -1, float("inf")
-            for it in range(max_iter):
-                t0 = time.time()
-                bc = sc.broadcast(ranks)
+                    R0[j, i] += w
+            RT = np.zeros_like(R0)
+            RT[:, perm] = R0
 
-                def step_fn(bids, _bc=bc, _files=block_files, _cols=cols,
-                            _lens=loc_lens, _lim=cache_limit, _npy=npy_dir,
-                            _bdir=blocks_dir):
-                    from hipporag_spark._worker_cache import block_contrib, get_block
+            def cells(m, _chunk=chunk):
+                return _cells_df(spark, pd.concat(
+                    done + [_nonzero_cells(m, perm, _chunk)]), idx)
 
-                    rsm = _bc.value  # (qc, n), rows contiguous
-                    for bid in bids:
-                        fs = _files.get(bid, [])
-                        if not fs:
-                            continue
-                        arrs = get_block((_bdir, bid), fs, _cols,
-                                         limit_bytes=_lim, npy_dir=_npy)
-                        si, dloc, wn = arrs[0], arrs[1], arrs[2]
-                        local = np.empty((rsm.shape[0], _lens[bid]),
-                                         dtype=np.float64)
-                        for j in range(rsm.shape[0]):
-                            local[j] = block_contrib(si, dloc, rsm[j], wn,
-                                                     _lens[bid], False)
-                        yield (bid, local)
-
-                parts = (
-                    sc.parallelize(range(n_blocks), n_tasks)
-                    .mapPartitions(step_fn).collect()
-                )
-                contrib = np.zeros((qc, n), dtype=np.float64)
-                for bid, local in parts:
-                    contrib[:, offs_meta[bid]:offs_meta[bid] + local.shape[1]] = local
-                bc.destroy()
-                dm = ranks[:, dangling].sum(axis=1)  # per-query dangling mass
-                new = (damping * (contrib + RT * dm[:, None])
-                       + (1.0 - damping) * RT)
-                delta = float(np.abs(new - ranks).sum(axis=1).max())
-                ranks = new
-                metrics.append(_step_metrics(it, "blocks", delta, t0,
-                                             ctx["n_edges"]))
-                if delta < tol:
-                    break
-            iterations = max(iterations, it + 1)
-            converged = converged and delta < tol
-            scores = ranks[:, perm] if perm is not None else ranks
+            ranks, it, conv, ms = _blocks_run(
+                spark, ctx, RT, damping, tol, g + max_iter, checkpoint_every,
+                store, cells,
+                None if start is None else _start_rows(RT, start, chunk, perm),
+                g)
+            metrics += ms
+            iterations = max(iterations, it - g)
+            converged = converged and conv
+            g = it
+            if store is not None:
+                done.append(_nonzero_cells(ranks, perm, chunk))
+            scores = ranks[:, perm]
             for j, q in enumerate(chunk):
                 sj = scores[j]
                 if out_idx is not None:
@@ -704,6 +637,89 @@ def _batch_blocks(spark, edges, sym, resets_c, damping, tol, max_iter,
     finally:
         if made_tmp:
             _shutil.rmtree(blocks_dir, ignore_errors=True)
+
+
+def _densify(spark, edges, ids, path):
+    """Dense integer ids: the distinct ``node_id``s of ``ids`` get their
+    global sorted rank as ``idx`` — by range-partition + sort-within +
+    per-partition offsets, never a single-partition global window
+    (VERDICT.md round-1 "What's wrong" #6), and the same mapping wherever
+    the range boundaries fall.  Writes the ``(node_id, idx)`` map to
+    ``path``; returns ``(id_map, n, int_edges)`` with ``edges``' src/dst
+    relabeled."""
+    n_parts = max(spark.sparkContext.defaultParallelism, 8)
+    parted = (
+        ids.distinct().repartitionByRange(n_parts, "node_id")
+        .sortWithinPartitions("node_id")
+        .withColumn("pid", F.spark_partition_id())
+        .persist()
+    )
+    sizes = {r["pid"]: r["cnt"] for r in parted.groupBy("pid").agg(
+        F.count(F.lit(1)).alias("cnt")).collect()}
+    offsets, n = [], 0
+    for p in sorted(sizes):
+        offsets.append((p, n))
+        n += sizes[p]
+    off_df = spark.createDataFrame(offsets, "pid int, off long")
+    wp = Window.partitionBy("pid").orderBy("node_id")
+    (
+        parted.withColumn("rn", F.row_number().over(wp))
+        .join(F.broadcast(off_df), "pid")
+        .select("node_id", (F.col("off") + F.col("rn") - 1).alias("idx"))
+        .write.mode("overwrite").parquet(path)
+    )
+    parted.unpersist()
+    idx = spark.read.parquet(path)
+    int_edges = (
+        edges.select("src", "dst", "weight")
+        .join(idx.withColumnRenamed("node_id", "src")
+                 .withColumnRenamed("idx", "src_i"), "src")
+        .join(idx.withColumnRenamed("node_id", "dst")
+                 .withColumnRenamed("idx", "dst_i"), "dst")
+        .select(F.col("src_i").alias("src"), F.col("dst_i").alias("dst"),
+                "weight")
+    )
+    return idx, n, int_edges
+
+
+def _nonzero_cells(ranks, perm, qids) -> pd.DataFrame:
+    """``(query_id, idx, rank)`` nonzero cells of an internal-numbering
+    rank matrix (row j = query ``qids[j]``), ``idx`` in layout ids."""
+    orig = ranks[:, perm]
+    qj, ni = np.nonzero(orig)
+    return pd.DataFrame({"query_id": np.asarray(qids, dtype=object)[qj],
+                         "idx": ni.astype(np.int64), "rank": orig[qj, ni]})
+
+
+def _cells_df(spark, cells: pd.DataFrame, id_map) -> DataFrame:
+    """Checkpoint table ``(query_id, node_id, rank)`` from layout-id cells:
+    ``node_id`` through ``id_map`` ``(node_id, idx)``, or the id as a
+    string when None."""
+    df = spark.createDataFrame(cells)
+    if id_map is None:
+        return df.select("query_id", F.col("idx").cast("string").alias("node_id"), "rank")
+    return df.join(id_map, "idx").select("query_id", "node_id", "rank")
+
+
+def _ckpt_cells(ckpt: DataFrame, id_map) -> pd.DataFrame:
+    """Inverse of :func:`_cells_df`: a checkpoint table as layout-id cells."""
+    if id_map is None:
+        df = ckpt.select("query_id", F.col("node_id").cast("long").alias("idx"), "rank")
+    else:
+        df = ckpt.join(id_map, "node_id").select("query_id", "idx", "rank")
+    return df.toPandas()
+
+
+def _start_rows(RT, cells: pd.DataFrame, qids, perm):
+    """Resume start: each query's checkpointed row, or its reset row when
+    the checkpoint holds none of its cells."""
+    ranks = RT.copy()
+    for j, q in enumerate(qids):
+        rows = cells[cells["query_id"] == q]
+        if len(rows):
+            ranks[j] = 0.0
+            ranks[j, perm[rows["idx"].to_numpy()]] = rows["rank"].to_numpy(dtype=np.float64)
+    return ranks
 
 
 # --------------------------------------------------------------------------
@@ -887,207 +903,156 @@ def prepare_csr_blocks(
     assign_mode: str = "auto",
     lpt_node_limit: int = 2_000_000,
 ) -> dict:
-    """One-time physical layout for :func:`ppr_from_blocks`: symmetrize
-    (without pair-dedup — duplicate rows sum naturally inside the bincount
-    kernel, identical math to igraph's parallel-edge conductance),
-    normalize by out-weight, densify node ids, and write the edge table as
-    parquet partitioned by ``block = dst_idx % n_blocks``.
+    """One-time physical layout for the block driver (:func:`ppr_from_blocks`,
+    blocks-mode batch PPR): symmetrize (without pair-dedup — duplicate
+    rows sum naturally inside the bincount kernel, identical math to
+    igraph's parallel-edge conductance), normalize by out-weight, pack
+    destinations into ``n_blocks`` degree-balanced blocks and renumber
+    nodes so each block owns one contiguous id span (the "relabeled"
+    layout), then write the edge table as parquet partitioned by block.
 
     Partitioning by **destination** makes each superstep task own a
     disjoint slice of the contribution vector: no cross-task reduction of
-    dense vectors, the driver just concatenates 8-byte-per-node slices.
-    The out-weight side joins broadcast (``n_nodes`` rows), so the only
-    full shuffle is the one-time re-block write.
+    dense vectors, just contiguous 8-byte-per-node slices.  The
+    out-weight side joins broadcast (``n_nodes`` rows), so the only full
+    shuffle is the one-time re-block write.
 
-    ``int_ids=n``: src/dst are already dense integers in [0, n).
-    Returns metadata ``{n_nodes, n_edges, n_blocks, id_map_path?}``.
+    ``int_ids=n``: src/dst are already dense integers in [0, n).  Otherwise
+    string ids are densified to their sorted rank (:func:`_densify`, map
+    written to ``id_map_path``) and laid out the same way.
+    Returns metadata ``{n_nodes, n_edges, n_blocks, id_map_path, ...}``.
 
-    ``assign_mode`` picks how destinations are packed into blocks
-    (``int_ids`` layout only): ``'lpt'`` is the exact driver-side LPT
-    bin-pack (optimal balance; an O(V) pandas + heap pass, fine to a few
-    million nodes), ``'distributed'`` computes the assignment with
-    DataFrame ops only — exact LPT over the top ``4*n_blocks`` hubs
-    (constant-size collect) + cumulative-degree range splitting of the
-    remainder sized by each block's residual capacity — so no per-node
-    relation ever lands on the driver (VERDICT r3 "What's wrong" #1: at
-    10^9 nodes the LPT pass is tens of driver GB and hours of Python).
-    ``'auto'`` uses LPT at or below ``lpt_node_limit`` nodes.  Balance:
-    distributed is within ``max(non-hub degree)`` edges of LPT per block.
+    ``assign_mode`` picks how destinations are packed into blocks:
+    ``'lpt'`` is the exact driver-side LPT bin-pack (optimal balance; an
+    O(V) pandas + heap pass, fine to a few million nodes),
+    ``'distributed'`` computes the assignment with DataFrame ops only —
+    exact LPT over the top ``4*n_blocks`` hubs (constant-size collect) +
+    cumulative-degree range splitting of the remainder sized by each
+    block's residual capacity — so no per-node relation ever lands on the
+    driver (VERDICT r3 "What's wrong" #1: at 10^9 nodes the LPT pass is
+    tens of driver GB and hours of Python).  ``'auto'`` uses LPT at or
+    below ``lpt_node_limit`` nodes.  Balance: distributed is within
+    ``max(non-hub degree)`` edges of LPT per block.
 
     This is the write-once layout a 10^12-edge deployment would keep as a
     bucketed Iceberg table: supersteps never reshuffle edges, they stream
     the co-located blocks.
 
-    **Driver-memory capacity (VERDICT r4 next-round #6).**  The blocks
-    paths keep O(V) arrays on the DRIVER: this layout's ``perm`` sidecar
-    (int64) plus, per run, the rank and reset vectors (float64) and the
-    dangling mask — ~8 bytes per node per array, so ~0.8 GB each at 10^8
+    **Capacity (VERDICT r4 next-round #6).**  The block driver keeps O(V)
+    arrays on the DRIVER: this layout's ``perm`` sidecar (int64) plus, per
+    run, the reset and rank matrices (float64, one row per query) and the
+    dangling mask — ~8 bytes per node per row, so ~0.8 GB each at 10^8
     nodes and ~8 GB each at 10^9.  With 3-4 such arrays live, a 128 GiB
-    driver is comfortable to ~10^9 nodes and runs out around 3-4×10^9;
-    the multi-reset :func:`_batch_blocks` additionally holds an
-    O(V × query_chunk) rank matrix per chunk, so divide the headroom by
-    the chunk width.  Past that, the ``dataframe`` backend
-    (:func:`_batch_dataframe`) keeps ALL state distributed (the driver sees
-    only per-superstep scalar aggregates) and is the no-driver-state
-    alternative at any node count.
+    driver is comfortable to ~10^9 nodes at |Q| = 1 and runs out around
+    3-4×10^9; blocks-mode batch PPR holds ``query_chunk`` rows per matrix,
+    so divide the headroom by the chunk width.  Each superstep task holds
+    its own ping-pong pair of rank matrices, 2 × chunk × n float64
+    (~1.6 GB per task at |Q| = 1 and 10^8 nodes).  Past that, the
+    ``dataframe`` backend (:func:`_batch_dataframe`) keeps ALL state
+    distributed (the driver sees only per-superstep scalar aggregates)
+    and is the no-driver-state alternative at any node count.
     """
     import json as _json
     import os as _os
 
+    id_map_path = None
+    if int_ids is None:
+        id_map_path = f"{out_dir}/id_map"
+        _, int_ids, edges = _densify(
+            spark, edges,
+            edges.select(F.col("src").alias("node_id"))
+            .unionByName(edges.select(F.col("dst").alias("node_id"))),
+            id_map_path)
+    n = int(int_ids)
     fwd = edges.select("src", "dst", "weight")
     rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "weight")
     sym = fwd.unionByName(rev)
     unit = bool(unit_weights)
-    layout = "modulo"
     block_sizes: list[int] = []
-    if int_ids is not None:
-        n = int(int_ids)
-        outw = sym.groupBy("src").agg(F.sum("weight").alias("out_w"))
-        outw.select(F.col("src").cast("long").alias("idx"), "out_w").write.mode(
-            "overwrite"
-        ).parquet(f"{out_dir}/outw")
-        if unit:
-            # unit edge weights: normalization folds into a broadcast
-            # 1/out_w gather inside the kernel — blocks carry only two
-            # int32 columns (halves shuffle + storage + read volume)
-            norm = sym.select(
-                F.col("src").cast("int").alias("src_idx"),
-                F.col("dst").cast("int").alias("dst_idx"),
-            )
-        else:
-            norm = sym.join(F.broadcast(outw.where(F.col("out_w") > 0)), "src").select(
-                F.col("src").cast("int").alias("src_idx"),
-                F.col("dst").cast("int").alias("dst_idx"),
-                (F.col("weight") / F.col("out_w")).alias("wn"),
-            )
-        id_map_path = None
-
-        mode_eff = assign_mode
-        if mode_eff == "auto":
-            mode_eff = "lpt" if n <= lpt_node_limit else "distributed"
-        if mode_eff == "distributed":
-            npy_dir_early = _os.path.join(out_dir, "npy")
-            _os.makedirs(npy_dir_early, exist_ok=True)
-            norm, block_sizes, perm = _assign_blocks_distributed(
-                spark, sym, norm, out_dir, n, n_blocks)
-            np.save(_os.path.join(npy_dir_early, "perm.npy"), perm)
-        else:
-            # ---- degree-aware balanced dst→block assignment (hub skew) ----
-            # Hub destinations make modulo blocks unequal; at P cores the
-            # superstep waits for the heaviest block.  LPT bin-packing of
-            # dsts by in-degree equalizes per-block edge counts explicitly
-            # (the north_rule's "skewed hubs range-partitioned explicitly");
-            # each block keeps a local→global index sidecar for the driver's
-            # scatter.  The in-degree aggregate is one map-side-combined
-            # groupBy; the assignment itself is an O(V log B) driver pass.
-            import heapq
-
-            indeg = sym.groupBy("dst").agg(F.count(F.lit(1)).alias("c")).toPandas()
-            dsts = indeg["dst"].to_numpy(dtype=np.int64)
-            cnts = indeg["c"].to_numpy(dtype=np.int64)
-            order = np.argsort(-cnts, kind="stable")
-            block_of = np.empty(len(dsts), dtype=np.int32)
-            loc_of = np.empty(len(dsts), dtype=np.int64)
-            heap = [(0, b) for b in range(n_blocks)]
-            heapq.heapify(heap)
-            fill = [0] * n_blocks
-            for i in order:
-                load, b = heapq.heappop(heap)
-                block_of[i] = b
-                loc_of[i] = fill[b]
-                fill[b] += 1
-                heapq.heappush(heap, (load + int(cnts[i]), b))
-            # ---- identity-permutation relabeling ----
-            # Renumber nodes so global index = (block offset + local slot):
-            # every task's contribution slice then lands in ONE contiguous
-            # span of the rank vector and peer-slice assembly is a sequential
-            # memcpy instead of a random fancy-scatter (the scatter was the
-            # dominant non-kernel cost at 32-way).  perm.npy maps original →
-            # relabeled ids; reset vectors translate on the way in, scores on
-            # the way out, so callers never see the internal numbering.
-            npy_dir_early = _os.path.join(out_dir, "npy")
-            _os.makedirs(npy_dir_early, exist_ok=True)
-            for b in range(n_blocks):
-                block_sizes.append(int((block_of == b).sum()))
-            offs = np.zeros(n_blocks + 1, dtype=np.int64)
-            offs[1:] = np.cumsum(block_sizes)
-            perm = np.full(n, -1, dtype=np.int64)
-            perm[dsts] = offs[block_of] + loc_of
-            isolated = np.flatnonzero(perm < 0)  # no in-edges: tail positions
-            perm[isolated] = np.arange(offs[-1], offs[-1] + len(isolated))
-            np.save(_os.path.join(npy_dir_early, "perm.npy"), perm)
-            map_pdf = pd.DataFrame(
-                {"dst_idx": dsts.astype(np.int32), "block": block_of,
-                 "dst_loc": loc_of.astype(np.int32)}
-            )
-            map_df = spark.createDataFrame(map_pdf)
-            smap_df = spark.createDataFrame(pd.DataFrame(
-                {"src_idx": np.arange(n, dtype=np.int32),
-                 "src_new": perm.astype(np.int32)}
-            ))
-            norm = (
-                norm.join(F.broadcast(map_df), "dst_idx").drop("dst_idx")
-                .join(F.broadcast(smap_df), "src_idx").drop("src_idx")
-                .withColumnRenamed("src_new", "src_idx")
-            )
-        layout = "relabeled"
+    outw = sym.groupBy("src").agg(F.sum("weight").alias("out_w"))
+    outw.select(F.col("src").cast("long").alias("idx"), "out_w").write.mode(
+        "overwrite"
+    ).parquet(f"{out_dir}/outw")
+    if unit:
+        # unit edge weights: normalization folds into a broadcast
+        # 1/out_w gather inside the kernel — blocks carry only two
+        # int32 columns (halves shuffle + storage + read volume)
+        norm = sym.select(
+            F.col("src").cast("int").alias("src_idx"),
+            F.col("dst").cast("int").alias("dst_idx"),
+        )
     else:
-        unit = False
-        # dense ids without a single-partition global window (VERDICT.md
-        # round-1 "What's wrong" #6): range-partition + sort-within, then
-        # global index = per-partition offset + local row_number.  The
-        # mapping equals the global sorted rank regardless of where the
-        # range boundaries fall, so the layout stays deterministic.
-        universe = sym.select(F.col("src").alias("node_id")).distinct()
-        n_parts = max(spark.sparkContext.defaultParallelism, 8)
-        parted = (
-            universe.repartitionByRange(n_parts, "node_id")
-            .sortWithinPartitions("node_id")
-            .withColumn("pid", F.spark_partition_id())
-            .persist()
+        norm = sym.join(F.broadcast(outw.where(F.col("out_w") > 0)), "src").select(
+            F.col("src").cast("int").alias("src_idx"),
+            F.col("dst").cast("int").alias("dst_idx"),
+            (F.col("weight") / F.col("out_w")).alias("wn"),
         )
-        sizes = {r["pid"]: r["cnt"] for r in
-                 parted.groupBy("pid").agg(F.count(F.lit(1)).alias("cnt")).collect()}
-        offsets, acc = {}, 0
-        for p in sorted(sizes):
-            offsets[p] = acc
-            acc += sizes[p]
-        off_df = spark.createDataFrame(
-            [(p, o) for p, o in offsets.items()], "pid int, off long")
-        wp = Window.partitionBy("pid").orderBy("node_id")
-        idx = (
-            parted.withColumn("rn", F.row_number().over(wp))
-            .join(F.broadcast(off_df), "pid")
-            .select("node_id", (F.col("off") + F.col("rn") - 1).alias("idx"))
+
+    npy_dir = _os.path.join(out_dir, "npy")
+    _os.makedirs(npy_dir, exist_ok=True)
+    mode_eff = assign_mode
+    if mode_eff == "auto":
+        mode_eff = "lpt" if n <= lpt_node_limit else "distributed"
+    if mode_eff == "distributed":
+        norm, block_sizes, perm = _assign_blocks_distributed(
+            spark, sym, norm, out_dir, n, n_blocks)
+        np.save(_os.path.join(npy_dir, "perm.npy"), perm)
+    else:
+        # ---- degree-aware balanced dst→block assignment (hub skew) ----
+        # Hub destinations make equal-id-range blocks unequal; at P cores
+        # the superstep waits for the heaviest block.  LPT bin-packing of
+        # dsts by in-degree equalizes per-block edge counts explicitly
+        # (the north_rule's "skewed hubs range-partitioned explicitly").
+        # The in-degree aggregate is one map-side-combined groupBy; the
+        # assignment itself is an O(V log B) driver pass.
+        import heapq
+
+        indeg = sym.groupBy("dst").agg(F.count(F.lit(1)).alias("c")).toPandas()
+        dsts = indeg["dst"].to_numpy(dtype=np.int64)
+        cnts = indeg["c"].to_numpy(dtype=np.int64)
+        order = np.argsort(-cnts, kind="stable")
+        block_of = np.empty(len(dsts), dtype=np.int32)
+        loc_of = np.empty(len(dsts), dtype=np.int64)
+        heap = [(0, b) for b in range(n_blocks)]
+        heapq.heapify(heap)
+        fill = [0] * n_blocks
+        for i in order:
+            load, b = heapq.heappop(heap)
+            block_of[i] = b
+            loc_of[i] = fill[b]
+            fill[b] += 1
+            heapq.heappush(heap, (load + int(cnts[i]), b))
+        # ---- identity-permutation relabeling ----
+        # Renumber nodes so global index = (block offset + local slot):
+        # every task's contribution slice then lands in ONE contiguous
+        # span of the rank vector and peer-slice assembly is a sequential
+        # memcpy instead of a random fancy-scatter (the scatter was the
+        # dominant non-kernel cost at 32-way).  perm.npy maps original →
+        # relabeled ids; reset vectors translate on the way in, scores on
+        # the way out, so callers never see the internal numbering.
+        for b in range(n_blocks):
+            block_sizes.append(int((block_of == b).sum()))
+        offs = np.zeros(n_blocks + 1, dtype=np.int64)
+        offs[1:] = np.cumsum(block_sizes)
+        perm = np.full(n, -1, dtype=np.int64)
+        perm[dsts] = offs[block_of] + loc_of
+        isolated = np.flatnonzero(perm < 0)  # no in-edges: tail positions
+        perm[isolated] = np.arange(offs[-1], offs[-1] + len(isolated))
+        np.save(_os.path.join(npy_dir, "perm.npy"), perm)
+        map_pdf = pd.DataFrame(
+            {"dst_idx": dsts.astype(np.int32), "block": block_of,
+             "dst_loc": loc_of.astype(np.int32)}
         )
-        id_map_path = f"{out_dir}/id_map"
-        idx.write.mode("overwrite").parquet(id_map_path)
-        parted.unpersist()
-        idx = spark.read.parquet(id_map_path)
-        n = idx.count()
-        outw = sym.groupBy("src").agg(F.sum("weight").alias("out_w"))
-        outw.join(idx.withColumnRenamed("node_id", "src"), "src").select(
-            F.col("idx").cast("long").alias("idx"), "out_w"
-        ).write.mode("overwrite").parquet(f"{out_dir}/outw")
+        map_df = spark.createDataFrame(map_pdf)
+        smap_df = spark.createDataFrame(pd.DataFrame(
+            {"src_idx": np.arange(n, dtype=np.int32),
+             "src_new": perm.astype(np.int32)}
+        ))
         norm = (
-            sym.join(outw.where(F.col("out_w") > 0), "src")
-            .join(idx.withColumnRenamed("node_id", "src").withColumnRenamed("idx", "src_idx"), "src")
-            .join(idx.withColumnRenamed("node_id", "dst").withColumnRenamed("idx", "dst_idx"), "dst")
-            .select(
-                F.col("src_idx").cast("int").alias("src_idx"),
-                F.col("dst_idx").cast("int").alias("dst_idx"),
-                (F.col("weight") / F.col("out_w")).alias("wn"),
-            )
+            norm.join(F.broadcast(map_df), "dst_idx").drop("dst_idx")
+            .join(F.broadcast(smap_df), "src_idx").drop("src_idx")
+            .withColumnRenamed("src_new", "src_idx")
         )
-    if layout == "modulo":
-        # store the LOCAL dst index (dst // n_blocks) — the block id
-        # already encodes dst % n_blocks, and the kernel bincounts
-        # straight into its local slice without a per-superstep division
-        norm = norm.withColumn(
-            "block", F.pmod(F.col("dst_idx"), F.lit(n_blocks)).cast("int")
-        ).withColumn(
-            "dst_loc", (F.col("dst_idx") / F.lit(n_blocks)).cast("int")
-        ).drop("dst_idx")
     (
         norm.repartition(n_blocks, "block")
         .write.mode("overwrite")
@@ -1105,8 +1070,6 @@ def prepare_csr_blocks(
     # first-touch page-fault churn.  Parquet remains the portable source.
     import glob as _glob
 
-    npy_dir = _os.path.join(out_dir, "npy")
-    _os.makedirs(npy_dir, exist_ok=True)
     cols = ["src_idx", "dst_loc"] + ([] if unit else ["wn"])
     bf: dict[int, list[str]] = {}
     for p in _glob.glob(f"{out_dir}/blocks/block=*/*.parquet"):
@@ -1144,107 +1107,61 @@ def prepare_csr_blocks(
     )
     meta = {"n_nodes": n, "n_edges": int(n_edges), "n_blocks": n_blocks,
             "unit_weights": unit, "npy_blocks": int(converted),
-            "layout": layout, "block_sizes": block_sizes,
-            "offsets": ([int(x) for x in np.cumsum([0] + block_sizes[:-1])]
-                        if layout == "relabeled" else []),
+            "layout": "relabeled", "block_sizes": block_sizes,
+            "offsets": [int(x) for x in np.cumsum([0] + block_sizes[:-1])],
             "id_map_path": id_map_path}
     with open(_os.path.join(out_dir, "meta.json"), "w") as f:
         _json.dump(meta, f)
     return meta
 
 
-def _load_blocks_ctx(spark: SparkSession, blocks_dir: str,
-                     reset_idx=None) -> dict:
-    """Shared setup for the block superstep paths: meta, block file map,
-    clamped+normalized reset vector (``reset_idx=None`` skips it — the
-    multi-reset batch path builds its own reset matrix), out-weight/
-    dangling sidecar, layout."""
+def _load_blocks_ctx(spark: SparkSession, blocks_dir: str) -> dict:
+    """What :func:`_blocks_run` needs of a :func:`prepare_csr_blocks`
+    layout: meta, block file map, per-block slice spans, the ``perm``
+    sidecar (original → internal ids) and the out-weight/dangling
+    sidecar."""
     import glob
     import json as _json
     import os as _os
 
     with open(_os.path.join(blocks_dir, "meta.json")) as f:
         meta = _json.load(f)
+    if meta.get("layout") != "relabeled":
+        raise ValueError(
+            f"{blocks_dir}/meta.json has block layout {meta.get('layout')!r}; "
+            "only 'relabeled' layouts are supported — re-run "
+            "prepare_csr_blocks to rebuild it")
     n = int(meta["n_nodes"])
-    n_blocks = int(meta["n_blocks"])
 
     block_files: dict[int, list[str]] = {}
     for p in glob.glob(f"{blocks_dir}/blocks/block=*/*.parquet"):
         b = int(p.split("block=")[1].split("/")[0])
         block_files.setdefault(b, []).append(p)
 
-    layout = meta.get("layout", "modulo")
-    perm = None
-    if layout == "relabeled":
-        # perm[original] = internal id; reset translates in, scores
-        # translate back out — callers stay in the original numbering
-        perm = np.load(_os.path.join(blocks_dir, "npy", "perm.npy"))
-
-    r_reset = None
-    if reset_idx is not None:
-        r_reset = np.asarray(reset_idx, dtype=np.float64)
-        r_reset = np.where(np.isnan(r_reset) | (r_reset < 0), 0.0, r_reset)
-        total = r_reset.sum()
-        if total <= 0:
-            raise ValueError("reset vector sums to 0 after NaN/negative clamping")
-        r_reset = r_reset / total
-        if perm is not None:
-            rr = np.empty(n, dtype=np.float64)
-            rr[perm] = r_reset
-            r_reset = rr
+    # perm[original] = internal id; resets translate in, scores
+    # translate back out — callers stay in the original numbering
+    perm = np.load(_os.path.join(blocks_dir, "npy", "perm.npy"))
 
     # out-weight sidecar: dangling mask + (unit-weight layout) the 1/out_w
     # vector the kernel folds into the gather.  Driver-materialized — fine
     # to ~1e8 nodes; beyond that it would shard like the rank vector.
     owpdf = spark.read.parquet(f"{blocks_dir}/outw").toPandas()
     out_w = np.zeros(n, dtype=np.float64)
-    ow_idx = owpdf["idx"].to_numpy()
-    if perm is not None:
-        ow_idx = perm[ow_idx]
-    out_w[ow_idx] = owpdf["out_w"].to_numpy(dtype=np.float64)
+    out_w[perm[owpdf["idx"].to_numpy()]] = owpdf["out_w"].to_numpy(dtype=np.float64)
     dangling = out_w <= 0.0
     unit = bool(meta.get("unit_weights"))
     inv_w = np.zeros(n, dtype=np.float64)
     nz = ~dangling
     inv_w[nz] = 1.0 / out_w[nz]
-    cols = ("src_idx", "dst_loc") if unit else ("src_idx", "dst_loc", "wn")
-
-    if layout == "balanced":
-        l2g = {
-            b: np.load(_os.path.join(blocks_dir, "npy", f"l2g_{b}.npy"))
-            for b in range(n_blocks)
-        }
-        loc_lens = {b: len(l2g[b]) for b in range(n_blocks)}
-        offs = None
-    elif layout == "relabeled":
-        l2g = None
-        loc_lens = {b: meta["block_sizes"][b] for b in range(n_blocks)}
-        offs = {b: meta["offsets"][b] for b in range(n_blocks)}
-    else:
-        l2g = None
-        loc_lens = {b: (n - b + n_blocks - 1) // n_blocks for b in range(n_blocks)}
-        offs = None
 
     return {
-        "n": n, "n_blocks": n_blocks, "n_edges": int(meta["n_edges"]),
-        "meta": meta, "block_files": block_files, "r_reset": r_reset,
-        "dangling": dangling, "unit": unit, "inv_w": inv_w, "cols": cols,
-        "l2g": l2g, "loc_lens": loc_lens, "perm": perm, "offs": offs,
+        "dir": blocks_dir, "n": n, "n_blocks": int(meta["n_blocks"]),
+        "n_edges": int(meta["n_edges"]), "block_files": block_files,
+        "perm": perm, "dangling": dangling, "unit": unit, "inv_w": inv_w,
+        "cols": ("src_idx", "dst_loc") if unit else ("src_idx", "dst_loc", "wn"),
+        "lens": meta["block_sizes"], "offs": meta["offsets"],
         "npy_dir": _os.path.join(blocks_dir, "npy") if meta.get("npy_blocks") else None,
     }
-
-
-def _resume_state(spark, store, resume, r_reset, n):
-    ranks = r_reset.copy()
-    start_it = 0
-    if resume and store is not None and store.latest_step() is not None:
-        step = store.latest_step()
-        rdf, _m = store.read(spark, step)
-        rpdf = rdf.orderBy("idx").toPandas()
-        ranks = np.zeros(n, dtype=np.float64)
-        ranks[rpdf["idx"].to_numpy()] = rpdf["rank"].to_numpy(dtype=np.float64)
-        start_it = step + 1
-    return ranks, start_it
 
 
 def ppr_from_blocks(
@@ -1255,110 +1172,47 @@ def ppr_from_blocks(
     tol: float = 1e-9,
     max_iter: int = 500,
     store: CheckpointStore | None = None,
-    checkpoint_every: int = 1,
     resume: bool = False,
-    worker_cache_budget_mb: int = 24576,
+    supersteps_per_job: int = 16,
+    exchange_dir: str | None = None,
 ) -> PPRResult:
-    """Superstep loop over :func:`prepare_csr_blocks` output with fully
-    parallel per-superstep work — the benchmark/scale path.
+    """Single-reset PPR over a :func:`prepare_csr_blocks` layout — the
+    |Q| = 1 case of :func:`_blocks_run`, the driver blocks-mode batch PPR
+    runs, so the scaling gate in ``bench.py`` benchmarks that kernel.
 
-    Each superstep broadcasts the float64 rank vector; one task per
-    dst-block gathers ``ranks[src] * wn`` and ``np.bincount``-accumulates
-    into its **local** dst slice (block owns ``dst ≡ b (mod n_blocks)``,
-    local index ``dst // n_blocks``) — map-side combine with no cross-task
-    reduction at all.  The driver strided-assigns the collected slices
-    (total traffic per superstep: exactly ``8·n_nodes`` bytes + the
-    broadcast).  Edge blocks are read worker-side from page-cached parquet
-    via :mod:`hipporag_spark._worker_cache` (per-process cache; repeat
-    supersteps on a reused worker are memory-speed) — the JVM↔Python
-    channel never carries edge data.
-
-    One Spark job is launched per superstep (~0.2-0.4 s of scheduler
-    latency on this sandbox); :func:`ppr_from_blocks_batched` amortizes
-    that over K supersteps per job and is the throughput-bench path.
+    ``reset_idx`` is indexed by layout id (NaN/negative clamped to 0, then
+    normalized).  ``supersteps_per_job`` supersteps run per barrier job
+    and, with ``store``, a checkpoint lands at each job boundary
+    (``supersteps_per_job=1``: every superstep) as the other backends'
+    ``(query_id, node_id, rank)`` table (query ``'q'``, layout ids as
+    strings); ``resume=True`` continues from the latest.  ``exchange_dir``:
+    where tasks exchange slices — shared storage on a cluster, tmpfs by
+    default in local mode.  Returns ``(node_id, score)`` per layout id.
     """
-    ctx = _load_blocks_ctx(spark, blocks_dir, reset_idx)
-    n, n_blocks, n_edges = ctx["n"], ctx["n_blocks"], ctx["n_edges"]
-    block_files, r_reset = ctx["block_files"], ctx["r_reset"]
-    dangling, unit, inv_w = ctx["dangling"], ctx["unit"], ctx["inv_w"]
-    cols, l2g, loc_lens = ctx["cols"], ctx["l2g"], ctx["loc_lens"]
-    perm, offs = ctx["perm"], ctx["offs"]
-    sc = spark.sparkContext
-    import os as _os
-
-    bc_inv = sc.broadcast(inv_w) if unit else None
-    # per-worker cache share: the cache budget is global — with P reused
-    # workers, each may cache at most budget/P (see _worker_cache)
-    cache_limit = int(worker_cache_budget_mb * 1024 * 1024 / max(sc.defaultParallelism, 1))
-
-    ranks, start_it = _resume_state(spark, store, resume, r_reset, n)
-
-    metrics: list[dict] = []
-    converged = False
-    it = start_it
-    npy_dir = ctx["npy_dir"]
-    for it in range(start_it, max_iter):
-        t0 = time.time()
-        bc = sc.broadcast(ranks)
-
-        def step_fn(bids, _bc=bc, _binv=bc_inv, _lens=loc_lens,
-                    _files=block_files, _unit=unit, _cols=cols, _lim=cache_limit,
-                    _npy=npy_dir):
-            from hipporag_spark._worker_cache import block_contrib, fold_scale, get_block
-
-            # unit layout: fold 1/out_w into the rank vector once — the
-            # kernel then runs single-gather (bitwise-identical product)
-            rs = fold_scale(_bc.value, _binv.value) if _unit else _bc.value
-            for bid in bids:
-                fs = _files.get(bid, [])
-                if not fs:
-                    continue
-                arrs = get_block((blocks_dir, bid), fs, _cols, limit_bytes=_lim,
-                                 npy_dir=_npy)
-                si, dloc = arrs[0], arrs[1]
-                scale = None if _unit else arrs[2]
-                yield (bid, block_contrib(si, dloc, rs, scale,
-                                          _lens[bid], False))
-
-        # one task per core: each task sweeps its share of the (balanced)
-        # blocks sequentially — removes per-wave dispatch overhead and
-        # last-wave raggedness at low core counts
-        n_tasks = min(n_blocks, sc.defaultParallelism)
-        parts = (
-            sc.parallelize(range(n_blocks), n_tasks).mapPartitions(step_fn).collect()
-        )
-        contrib = np.zeros(n, dtype=np.float64)
-        for bid, local in parts:
-            if l2g is not None:
-                contrib[l2g[bid]] = local
-            elif offs is not None:  # relabeled: contiguous span
-                contrib[offs[bid]:offs[bid] + len(local)] = local
-            else:
-                contrib[bid::n_blocks] = local
-        bc.destroy()
-        dm = float(ranks[dangling].sum())
-        new = damping * (contrib + dm * r_reset) + (1.0 - damping) * r_reset
-        delta = float(np.abs(new - ranks).sum())
-        ranks = new
-        m = {"superstep": it, "l1_delta": delta, "dangling_mass": dm,
-             "edges_processed": int(n_edges), "wall_ms": (time.time() - t0) * 1000,
-             "mode": "csr_rdd"}
-        metrics.append(m)
-        if store is not None and (it % checkpoint_every == 0 or delta < tol):
-            rdf = spark.createDataFrame(
-                pd.DataFrame({"idx": np.arange(n, dtype=np.int64), "rank": ranks})
-            )
-            store.write(it, rdf, m)
-        if delta < tol:
-            converged = True
-            break
-
-    if bc_inv is not None:
-        bc_inv.destroy()
-    scores = ranks[perm] if perm is not None else ranks  # back to caller ids
-    out = spark.createDataFrame(pd.DataFrame({"idx": np.arange(n, dtype=np.int64), "score": scores}))
+    ctx = _load_blocks_ctx(spark, blocks_dir)
+    n, perm = ctx["n"], ctx["perm"]
+    r = np.asarray(reset_idx, dtype=np.float64)
+    r = np.where(np.isnan(r) | (r < 0), 0.0, r)
+    total = r.sum()
+    if total <= 0:
+        raise ValueError("reset vector sums to 0 after NaN/negative clamping")
+    RT = np.empty((1, n), dtype=np.float64)
+    RT[0, perm] = r / total
+    ckpt, start_it = _resume_ranks(spark, store, resume)
+    ranks = None if ckpt is None else _start_rows(RT, _ckpt_cells(ckpt, None), ["q"], perm)
+    ranks, it, converged, metrics = _blocks_run(
+        spark, ctx, RT, damping, tol, max_iter, supersteps_per_job, store,
+        lambda m: _cells_df(spark, _nonzero_cells(m, perm, ["q"]), None),
+        ranks, start_it, exchange_dir)
+    out = spark.createDataFrame(pd.DataFrame(
+        {"idx": np.arange(n, dtype=np.int64), "score": ranks[0, perm]}))
     return PPRResult(out.select(F.col("idx").cast("string").alias("node_id"), "score"),
-                     it + 1, converged, metrics)
+                     it, converged, metrics)
+
+
+# Worker block-cache budget (MB) shared by all tasks of a superstep job;
+# each task may cache at most its 1/n_tasks share (see _worker_cache).
+_WORKER_CACHE_BUDGET_MB = 24576
 
 
 def _atomic_save(path: str, arr) -> None:
@@ -1369,374 +1223,277 @@ def _atomic_save(path: str, arr) -> None:
     _os.replace(tmp, path)
 
 
-def ppr_from_blocks_batched(
-    spark: SparkSession,
-    blocks_dir: str,
-    reset_idx: np.ndarray,
-    damping: float = 0.85,
-    tol: float = 1e-9,
-    max_iter: int = 500,
-    store: CheckpointStore | None = None,
-    resume: bool = False,
-    supersteps_per_job: int = 16,
-    exchange_dir: str | None = None,
-    worker_cache_budget_mb: int = 24576,
-) -> PPRResult:
-    """Gang-scheduled superstep batches — the throughput path.
+def _blocks_run(spark, ctx, RT, damping, tol, max_iter, supersteps_per_job,
+                store=None, cells=None, ranks=None, start_it=0,
+                exchange_dir=None):
+    """The one CSR-block superstep driver: iterate the ``(q × n)`` rank
+    matrix ``ranks`` (default: the reset matrix ``RT``; both in the
+    internal numbering of ``ctx`` = :func:`_load_blocks_ctx`) from
+    superstep ``start_it`` until the max per-query L1 delta is below
+    ``tol`` or superstep ``max_iter``.  Returns ``(ranks, it, converged,
+    metrics)``, ``it`` being the next superstep number.
 
-    :func:`ppr_from_blocks` launches one Spark job per superstep; on this
-    sandbox a bare 32-task job costs ~0.2-0.4 s of scheduler+RPC latency,
-    which caps scaling efficiency long before the kernel does.  Here ONE
-    barrier-mode job (``rdd.barrier()``, all-or-nothing gang scheduling)
-    runs up to ``supersteps_per_job`` supersteps.  Per superstep, each
-    task writes ONE atomically-renamed ``.npy`` file holding the
-    concatenated contribution slices of its dst-blocks, then consumes its
-    peers' files incrementally as they appear (assembly overlaps the
-    straggler wait), assembles the full next-rank vector privately, and
-    applies the damping/dangling/reset blend locally — every task derives
-    bit-identical state, so convergence decisions need no coordinator.
-    This is the same structure a 1000-executor deployment uses to
-    amortize scheduler latency: slices live on shared storage (an
-    all-to-all of ``8·n`` bytes per superstep, the minimum any PPR
-    superstep must exchange) and double as per-partition checkpoint
-    state; the driver checkpoints batch boundaries through ``store``
-    (Iceberg-style manifest + lineage), so a killed job resumes from the
-    last completed batch.
+    A bare Spark job costs ~0.2-0.4 s of scheduler+RPC latency, which caps
+    scaling long before the kernel does, so ONE barrier-mode job
+    (all-or-nothing gang scheduling) runs up to
+    ``supersteps_per_job`` supersteps (:func:`_superstep_task`).  Per
+    superstep each task writes ONE atomically-renamed ``.npy`` file with
+    the pre-blended next-rank slices of its dst-blocks, then assembles the
+    full next-rank matrix privately from its peers' files as they land —
+    every task derives bit-identical state, so convergence needs no
+    coordinator.  Slices live on shared storage (an all-to-all of
+    ``8·q·n`` bytes per superstep, the minimum any PPR superstep must
+    exchange); the JVM↔Python channel never carries edges or per-step
+    ranks.  A checkpoint lands at every job boundary: ``cells(ranks)``
+    (the ``(query_id, node_id, rank)`` table) goes to ``store`` with
+    per-task lineage, so a killed run resumes from the last finished job.
 
     A shared writable mmap for the rank vector was tried and rejected:
-    concurrently gathering from pages another process keeps dirtying
-    halves kernel throughput (write-protect fault + TLB-shootdown churn);
-    private per-task assembly from read-only slice files is faster and
-    carries no single-host assumption.
+    gathering from pages another process keeps dirtying halves kernel
+    throughput (write-protect fault + TLB-shootdown churn).
 
-    igraph-parity semantics are identical to :func:`ppr_from_blocks`
-    (same kernel, same blend/dangling/L1 float ops in the same order);
-    cross-checked bitwise in ``tests/test_ppr_blocks.py``.
+    Per query row the float ops are ``new = d·(contrib + dm·r) + (1−d)·r``
+    in the same order whatever ``q`` is, so a row's result does not
+    depend on which queries share its chunk (bitwise-checked across
+    ``supersteps_per_job`` in ``tests/test_ppr_blocks.py``).
     """
-    import json as _json
+    import functools
     import os as _os
     import shutil as _shutil
     import uuid as _uuid
 
-    ctx = _load_blocks_ctx(spark, blocks_dir, reset_idx)
-    n, n_blocks, n_edges = ctx["n"], ctx["n_blocks"], ctx["n_edges"]
-    block_files, r_reset = ctx["block_files"], ctx["r_reset"]
-    dangling, unit, inv_w = ctx["dangling"], ctx["unit"], ctx["inv_w"]
-    cols, l2g, loc_lens, npy_dir = ctx["cols"], ctx["l2g"], ctx["loc_lens"], ctx["npy_dir"]
-    perm, offs = ctx["perm"], ctx["offs"]
     sc = spark.sparkContext
-    n_tasks = min(n_blocks, sc.defaultParallelism)
-    existing = sorted(block_files.keys())
-    cache_limit = int(worker_cache_budget_mb * 1024 * 1024 / max(n_tasks, 1))
-
+    n_tasks = min(ctx["n_blocks"], sc.defaultParallelism)
     if exchange_dir is None:
         # local mode: tmpfs — the exchange is transient all-to-all state,
         # no reason to touch disk.  Cluster mode: must be shared storage.
         if sc.master.startswith("local") and _os.path.isdir("/dev/shm"):
             exchange_dir = "/dev/shm/hipporag_xchg"
         else:
-            exchange_dir = _os.path.join(blocks_dir, "xchg")
+            exchange_dir = _os.path.join(ctx["dir"], "xchg")
     xdir = _os.path.join(exchange_dir, _uuid.uuid4().hex[:10])
     _os.makedirs(xdir, exist_ok=True)
-    _atomic_save(_os.path.join(xdir, "reset.npy"), r_reset)
-    _atomic_save(_os.path.join(xdir, "dangling_idx.npy"), np.flatnonzero(dangling))
-    if unit:
-        _atomic_save(_os.path.join(xdir, "inv_w.npy"), inv_w)
+    _atomic_save(_os.path.join(xdir, "reset.npy"), RT)
+    _atomic_save(_os.path.join(xdir, "dangling_idx.npy"), np.flatnonzero(ctx["dangling"]))
+    if ctx["unit"]:
+        _atomic_save(_os.path.join(xdir, "inv_w.npy"), ctx["inv_w"])
+    static = {
+        "xdir": xdir, "nt": n_tasks, "existing": sorted(ctx["block_files"]),
+        "files": ctx["block_files"], "lens": ctx["lens"], "offs": ctx["offs"],
+        "unit": ctx["unit"], "cols": ctx["cols"], "npy": ctx["npy_dir"],
+        "bd": ctx["dir"], "d": damping, "tol": tol,
+        "lim": int(_WORKER_CACHE_BUDGET_MB * 1024 * 1024 / max(n_tasks, 1)),
+    }
 
-    ranks, start_it = _resume_state(spark, store, resume, r_reset, n)
-
+    ranks = RT if ranks is None else ranks
     metrics: list[dict] = []
-    converged = False
-    it = start_it
+    it, converged = start_it, False
     try:
-        it, ranks, converged = _batched_loop(
-            spark, sc, store, metrics, ranks, start_it, max_iter, converged,
-            supersteps_per_job, xdir, n, n_tasks, n_blocks, existing,
-            block_files, loc_lens, npy_dir, unit, cols, cache_limit,
-            blocks_dir, damping, tol, l2g, n_edges, offs,
-        )
+        while it < max_iter and not converged:
+            bdir = _os.path.join(xdir, f"b{it}")
+            _os.makedirs(bdir, exist_ok=True)
+            _atomic_save(_os.path.join(bdir, "rank_in.npy"), ranks)
+            task = functools.partial(_superstep_task, c=static, bdir=bdir, it0=it,
+                                     k=min(supersteps_per_job, max_iter - it))
+            parts = (
+                sc.parallelize(range(n_tasks), n_tasks)
+                .barrier()
+                .mapPartitions(task)
+                .collect()
+            )
+            lineage = [p[0] for p in parts]
+            _, ranks, deltas = next(p for p in parts if p[1] is not None)
+            for s, delta in enumerate(deltas):
+                metrics.append({
+                    "superstep": it + s, "mode": "blocks", "l1_delta": delta,
+                    # slowest task's in-job wall for this superstep
+                    "wall_ms": max(ln["wall_ms"][s] for ln in lineage),
+                    "edges_processed": ctx["n_edges"]})
+            # per-step phase walls (slowest task per phase per step) —
+            # localizes kernel vs exchange vs blend cost per parallelism
+            metrics[-1]["job_phases"] = {
+                ph: [round(max(ln["phases"][ph][s] for ln in lineage), 1)
+                     for s in range(len(deltas))]
+                for ph in ("kernel_ms", "consume_ms", "blend_ms")
+            }
+            it += len(deltas)
+            converged = deltas[-1] < tol
+            if store is not None:
+                store.write(it - 1, cells(ranks), metrics[-1], partitions=lineage)
+            _shutil.rmtree(bdir, ignore_errors=True)
     finally:
         # any failure (peer timeout, task error, driver exception) must not
         # leak rank/slice files into the tmpfs exchange dir
         _shutil.rmtree(xdir, ignore_errors=True)
-    scores = ranks[perm] if perm is not None else ranks  # back to caller ids
-    out = spark.createDataFrame(
-        pd.DataFrame({"idx": np.arange(n, dtype=np.int64), "score": scores})
-    )
-    return PPRResult(out.select(F.col("idx").cast("string").alias("node_id"), "score"),
-                     it, converged, metrics)
+    return ranks, it, converged, metrics
 
 
-def _batched_loop(spark, sc, store, metrics, ranks, start_it, max_iter, converged,
-                  supersteps_per_job, xdir, n, n_tasks, n_blocks, existing,
-                  block_files, loc_lens, npy_dir, unit, cols, cache_limit,
-                  blocks_dir, damping, tol, l2g, n_edges, offs=None):
+def _superstep_task(_pids, c, bdir, it0, k):
+    """One gang-scheduled task of :func:`_blocks_run`: up to ``k``
+    supersteps from ``bdir/rank_in.npy`` over this task's dst-blocks.
+    Every task yields ``(lineage, None, None)`` except task 0, which
+    yields ``(lineage, final ranks, per-superstep max L1 deltas)``."""
     import os as _os
-    import shutil as _shutil
+    import time as _t
 
-    it = start_it
-    while it < max_iter and not converged:
-        k_batch = min(supersteps_per_job, max_iter - it)
-        bdir = _os.path.join(xdir, f"b{it}")
-        _os.makedirs(bdir, exist_ok=True)
-        _atomic_save(_os.path.join(bdir, "rank_in.npy"), ranks)
+    from pyspark import BarrierTaskContext
 
-        def batch_fn(_pids, _bdir=bdir, _xdir=xdir, _it0=it, _k=k_batch,
-                     _nt=n_tasks, _nb=n_blocks, _existing=existing,
-                     _files=block_files, _lens=loc_lens, _l2g_dir=npy_dir,
-                     _unit=unit, _cols=cols, _lim=cache_limit, _npy=npy_dir,
-                     _n=n, _d=damping, _tol=tol, _bd=blocks_dir,
-                     _layout_balanced=(l2g is not None), _offs=offs):
-            import time as _t
+    from hipporag_spark._worker_cache import block_contrib, fold_scale, get_block
 
-            from pyspark import BarrierTaskContext
+    pid = BarrierTaskContext.get().partitionId()
+    nt, lens, offs, d = c["nt"], c["lens"], c["offs"], c["d"]
+    task_blocks = [[b for b in c["existing"] if b % nt == t] for t in range(nt)]
+    my_blocks = task_blocks[pid]
 
-            from hipporag_spark._worker_cache import block_contrib, fold_scale, get_block
+    def block(b):
+        return get_block((c["bd"], b), c["files"].get(b, []), c["cols"],
+                         limit_bytes=c["lim"], npy_dir=c["npy"])
 
-            tctx = BarrierTaskContext.get()
-            pid = tctx.partitionId()
-            task_blocks = {t: [b for b in _existing if b % _nt == t]
-                           for t in range(_nt)}
-            my_blocks = task_blocks[pid]
-            reset_v = np.load(_os.path.join(_xdir, "reset.npy"))
-            dang_idx = np.load(_os.path.join(_xdir, "dangling_idx.npy"))
-            scale_node = np.load(_os.path.join(_xdir, "inv_w.npy")) if _unit else None
-            l2g_all = None
-            peer_idx = None
-            if _layout_balanced:
-                l2g_all = {b: np.load(_os.path.join(_l2g_dir, f"l2g_{b}.npy"))
-                           for b in _existing}
-                # one concatenated scatter-index per peer, built once per
-                # job: assembly becomes ONE vectorized fancy scatter per
-                # landed slice instead of a python loop over blocks
-                peer_idx = {
-                    t: np.concatenate([l2g_all[b] for b in task_blocks[t]])
-                    if task_blocks[t] else np.empty(0, dtype=np.int64)
-                    for t in range(_nt)
-                }
-            my_len = sum(_lens[b] for b in my_blocks)
-            # send_buf = [owned slice | L1 partial]: the per-task L1
-            # convergence partial travels as ONE trailing element of the
-            # slice file instead of a separate d_*.npy per (task, step) —
-            # at 32-way the 32×32 tiny-file creates+opens+unlinks per
-            # superstep were 5-15% of the superstep wall (blend_ms 25-65ms
-            # vs 2ms at 8-way), a pure parallelism tax on the 8→32 pair
-            send_buf = np.empty(my_len + 1, dtype=np.float64)
-            slice_buf = send_buf[:my_len]
-            # reused per-step buffers: fresh 8·n-byte allocations every
-            # superstep would pay first-touch page faults + memset churn
-            contrib = np.empty(_n, dtype=np.float64)
-            # global positions of this task's slice elements, slice order
-            # — the blend below is SLICE-LOCAL: each of the n elements is
-            # blended exactly once, by the task that owns its dst-slice.
-            # The full-vector blend this replaces was O(n) work replicated
-            # in every task (at 32-way: 32 × ~6 passes over 8·n bytes of
-            # shared-bandwidth traffic per superstep), a fixed per-task
-            # cost that capped 8→32 scaling once the kernel was tiled.
-            if _layout_balanced:
-                my_idx = peer_idx[pid]
-            elif _offs is not None:
-                my_idx = (np.concatenate(
-                    [np.arange(_offs[b], _offs[b] + _lens[b], dtype=np.int64)
-                     for b in my_blocks]) if my_blocks
-                    else np.empty(0, dtype=np.int64))
-            else:
-                my_idx = (np.concatenate(
-                    [np.arange(b, _n, _nb, dtype=np.int64)
-                     for b in my_blocks]) if my_blocks
-                    else np.empty(0, dtype=np.int64))
-            my_reset = reset_v[my_idx]
-            pslice = np.empty(my_len, dtype=np.float64)
-            tslice = np.empty(my_len, dtype=np.float64)
+    reset = np.load(_os.path.join(c["xdir"], "reset.npy"), mmap_mode="r")
+    q, n = reset.shape
+    dang_idx = np.load(_os.path.join(c["xdir"], "dangling_idx.npy"))
+    scale_node = np.load(_os.path.join(c["xdir"], "inv_w.npy")) if c["unit"] else None
+    # global positions of this task's slice elements, slice order — the
+    # blend below is SLICE-LOCAL: each of the n columns is blended exactly
+    # once, by the task that owns its dst-slice.  A full-matrix blend in
+    # every task would be O(q·n) work replicated per task (at 32-way:
+    # 32 × ~6 passes over 8·n bytes of shared bandwidth per superstep), a
+    # fixed per-task cost that capped 8→32 scaling once the kernel was
+    # tiled.
+    my_idx = (np.concatenate([np.arange(offs[b], offs[b] + lens[b], dtype=np.int64)
+                              for b in my_blocks])
+              if my_blocks else np.empty(0, dtype=np.int64))
+    my_len = len(my_idx)
+    my_reset = np.ascontiguousarray(reset[:, my_idx])
+    # positions owned by NO task's slice: the layout parks zero-in-edge
+    # nodes past the last block span, and a dst range with no in-edges at
+    # all produces no block directory.  Every task blends them privately
+    # from the reset alone (their contribution is exactly 0.0, so this
+    # matches a zero-filled full blend bitwise); task 0 folds their L1
+    # term into its convergence partial.
+    cov = np.zeros(n, dtype=bool)
+    for b in c["existing"]:
+        cov[offs[b]:offs[b] + lens[b]] = True
+    miss_idx = np.flatnonzero(~cov)
+    miss_reset = np.ascontiguousarray(reset[:, miss_idx])
+    del cov, reset
+    # send = [q owned slices | q L1 partials]: the per-task L1 partials
+    # travel at the tail of the slice file instead of a separate file per
+    # (task, step) — at 32-way the 32×32 tiny-file creates+opens+unlinks
+    # per superstep were 5-15% of the superstep wall
+    send = np.empty(q * my_len + q, dtype=np.float64)
+    slices = send[:q * my_len].reshape(q, my_len)
+    dpart = send[q * my_len:]
+    pslice = np.empty((q, my_len), dtype=np.float64)
+    tslice = np.empty((q, my_len), dtype=np.float64)
+    # ping-pong rank matrices; reused buffers avoid first-touch page
+    # faults + memset churn of fresh 8·q·n-byte allocations per superstep
+    prev = np.load(_os.path.join(bdir, "rank_in.npy"))
+    contrib = np.empty_like(prev)
 
-            # positions owned by NO task's slice: relabeled layouts park
-            # zero-in-edge nodes past the last block span, and a dst range
-            # with no in-edges at all produces no block directory.  The
-            # slice-local blend skips them, so every task blends them
-            # privately from the reset alone (their contribution is
-            # exactly 0.0, making this bitwise-identical to the
-            # zero-filled full-vector blend of the other modes); pid 0
-            # folds their L1 term into its convergence partial.
-            cov = np.zeros(_n, dtype=bool)
-            for t_ in range(_nt):
-                if _layout_balanced:
-                    cov[peer_idx[t_]] = True
-                elif _offs is not None:
-                    for b in task_blocks[t_]:
-                        cov[_offs[b]:_offs[b] + _lens[b]] = True
-                else:
-                    for b in task_blocks[t_]:
-                        cov[b::_nb] = True
-            miss_idx = np.flatnonzero(~cov)
-            miss_reset = reset_v[miss_idx]
-            del cov
-
-            prev = np.load(_os.path.join(_bdir, "rank_in.npy"))
-            walls = []
-            # per-step phase walls (lists) — totals hide the cold first
-            # step's block-load cost and make 8-vs-32 diagnosis impossible
-            phases = {"kernel_ms": [], "consume_ms": [], "blend_ms": []}
-            steps_done = 0
-            stop = False
-            step_meta = []
-            for s in range(_k):
-                g = _it0 + s
-                t0 = _t.time()
-                # unit layout: fold 1/out_w into the rank vector once per
-                # superstep — single-gather kernel, bitwise-identical
-                rs = fold_scale(prev, scale_node) if _unit else prev
-                off = 0
-                for b in my_blocks:
-                    arrs = get_block((_bd, b), _files.get(b, []), _cols,
-                                     limit_bytes=_lim, npy_dir=_npy)
-                    scale = None if _unit else arrs[2]
-                    L = _lens[b]
-                    slice_buf[off:off + L] = block_contrib(
-                        arrs[0], arrs[1], rs, scale, L, False)
-                    off += L
-                # slice-local blend, float-op-for-float-op identical per
-                # element to the full-vector
-                #   new = d·(contrib + dm·reset) + (1−d)·reset
-                # (elementwise ops, so blending only the owned slice is
-                # bitwise-identical); the L1 term is a per-task partial,
-                # combined in fixed pid order by every task below so all
-                # tasks reach the same convergence decision
-                dm = float(prev[dang_idx].sum())
-                np.take(prev, my_idx, out=pslice)
-                np.multiply(my_reset, dm, out=tslice)
-                np.add(slice_buf, tslice, out=slice_buf)
-                np.multiply(slice_buf, _d, out=slice_buf)
-                np.multiply(my_reset, 1.0 - _d, out=tslice)
-                np.add(slice_buf, tslice, out=slice_buf)   # ≡ new, own slice
-                np.subtract(slice_buf, pslice, out=pslice)
-                np.abs(pslice, out=pslice)
-                dpart = float(pslice.sum())
-                miss_new = None
-                if miss_idx.size:
-                    # same op sequence as the slice blend with contrib=0
-                    miss_new = (dm * miss_reset) * _d + (1.0 - _d) * miss_reset
-                    if pid == 0:
-                        dpart += float(np.abs(miss_new - prev[miss_idx]).sum())
-                send_buf[my_len] = dpart          # L1 partial, piggybacked
-                _atomic_save(_os.path.join(_bdir, f"t_{g}_{pid}.npy"), send_buf)
-                t1 = _t.time()
-                phases["kernel_ms"].append((t1 - t0) * 1000)
-
-                # consume peer slice files as they land — assembly
-                # overlaps the straggler wait.  Slices are pre-blended and
-                # partition [0, n), so no zero-fill and no post-pass: the
-                # assembled vector IS the next rank vector.
-                pending = set(range(_nt))
-                dparts = np.zeros(_nt, dtype=np.float64)
-                deadline = _t.time() + 600.0
-                sleep = 1e-4
-                while pending:
-                    landed = []
-                    for t_ in pending:
-                        p = _os.path.join(_bdir, f"t_{g}_{t_}.npy")
-                        if _os.path.exists(p):
-                            # mmap: sequential one-shot read straight from
-                            # the page cache, no 8-byte-per-node heap copy
-                            arr = np.load(p, mmap_mode="r")
-                            dparts[t_] = arr[-1]
-                            arr = arr[:-1]
-                            if _layout_balanced:
-                                contrib[peer_idx[t_]] = arr
-                            elif _offs is not None:
-                                # relabeled layout: each block's slice is
-                                # a contiguous span — sequential memcpy
-                                o = 0
-                                for b in task_blocks[t_]:
-                                    L = _lens[b]
-                                    contrib[_offs[b]:_offs[b] + L] = arr[o:o + L]
-                                    o += L
-                            else:
-                                o = 0
-                                for b in task_blocks[t_]:
-                                    L = _lens[b]
-                                    contrib[b::_nb] = arr[o:o + L]
-                                    o += L
-                            landed.append(t_)
-                    pending.difference_update(landed)
-                    if pending:
-                        if landed:
-                            sleep = 1e-4
-                        if _t.time() > deadline:
-                            raise RuntimeError(
-                                f"superstep {g}: peers {sorted(pending)} missing")
-                        _t.sleep(sleep)
-                        sleep = min(sleep * 1.5, 2e-3)
-                if miss_new is not None:
-                    contrib[miss_idx] = miss_new
-                t2 = _t.time()
-                phases["consume_ms"].append((t2 - t1) * 1000)
-
-                # combine the per-task L1 partials in fixed pid order —
-                # every task computes the identical float sum, so the
-                # convergence decision needs no coordinator
-                delta = 0.0
-                for t_ in range(_nt):
-                    delta += float(dparts[t_])
-                prev, contrib = contrib, prev            # ping-pong
-                stop = delta < _tol
-                step_meta.append({"l1_delta": delta, "dangling_mass": dm})
-                if pid == 0 and g > _it0:
-                    # every peer produced step g ⇒ nobody still reads g-1
-                    for t_ in range(_nt):
-                        old = _os.path.join(_bdir, f"t_{g - 1}_{t_}.npy")
-                        if _os.path.exists(old):
-                            _os.unlink(old)
-                phases["blend_ms"].append((_t.time() - t2) * 1000)
-                walls.append((_t.time() - t0) * 1000)
-                steps_done += 1
-                if stop:
-                    break
-            out = {"pid": pid, "blocks": my_blocks, "wall_ms": walls,
-                   "phases": {k: [round(x, 1) for x in v] for k, v in phases.items()},
-                   "edges": int(sum(len(get_block((_bd, b), _files.get(b, []),
-                                                  _cols, limit_bytes=_lim,
-                                                  npy_dir=_npy)[0])
-                                    for b in my_blocks))}
+    walls, deltas = [], []
+    # per-step phase walls (lists) — totals hide the cold first step's
+    # block-load cost and make 8-vs-32 diagnosis impossible
+    phases = {"kernel_ms": [], "consume_ms": [], "blend_ms": []}
+    for s in range(k):
+        g = it0 + s
+        t0 = _t.time()
+        for j in range(q):
+            # unit layout: fold 1/out_w into the rank row once per
+            # superstep — single-gather kernel, bitwise-identical product
+            rs = fold_scale(prev[j], scale_node) if c["unit"] else prev[j]
+            off = 0
+            for b in my_blocks:
+                arrs = block(b)
+                slices[j, off:off + lens[b]] = block_contrib(
+                    arrs[0], arrs[1], rs, None if c["unit"] else arrs[2], lens[b])
+                off += lens[b]
+        # slice-local blend, float-op-for-float-op identical per element
+        # to the full-matrix  new = d·(contrib + dm·reset) + (1−d)·reset
+        # (elementwise ops); the L1 terms are per-(task, query) partials,
+        # combined in fixed pid order by every task below
+        dm = np.array([prev[j][dang_idx].sum() for j in range(q)])[:, None]
+        np.take(prev, my_idx, axis=1, out=pslice)
+        np.multiply(my_reset, dm, out=tslice)
+        np.add(slices, tslice, out=slices)
+        np.multiply(slices, d, out=slices)
+        np.multiply(my_reset, 1.0 - d, out=tslice)
+        np.add(slices, tslice, out=slices)   # ≡ new, own slices
+        np.subtract(slices, pslice, out=pslice)
+        np.abs(pslice, out=pslice)
+        for j in range(q):
+            dpart[j] = pslice[j].sum()
+        miss_new = None
+        if miss_idx.size:
+            # same op sequence as the slice blend with contrib = 0
+            miss_new = (dm * miss_reset) * d + (1.0 - d) * miss_reset
             if pid == 0:
-                yield ("result", prev, steps_done, step_meta, out)
-            else:
-                yield ("lineage", out)
+                md = np.abs(miss_new - prev[:, miss_idx])
+                for j in range(q):
+                    dpart[j] += md[j].sum()
+        _atomic_save(_os.path.join(bdir, f"t_{g}_{pid}.npy"), send)
+        t1 = _t.time()
+        phases["kernel_ms"].append((t1 - t0) * 1000)
 
-        parts = (
-            sc.parallelize(range(n_tasks), n_tasks)
-            .barrier()
-            .mapPartitions(batch_fn)
-            .collect()
-        )
-        result = next(p for p in parts if p[0] == "result")
-        _, ranks, steps_done, step_meta, out0 = result
-        batch_lineage = [out0] + [p[1] for p in parts if p[0] == "lineage"]
-        # per-step phase walls (slowest task per phase per step) — the
-        # observability that localizes kernel vs exchange vs blend cost at
-        # each parallelism level
-        job_phases = {
-            ph: [round(max(ln["phases"][ph][s] for ln in batch_lineage
-                           if s < len(ln["phases"][ph])), 1)
-                 for s in range(steps_done)]
-            for ph in ("kernel_ms", "consume_ms", "blend_ms")
-        }
-        for s in range(steps_done):
-            m = {"superstep": it + s, "l1_delta": step_meta[s]["l1_delta"],
-                 "dangling_mass": step_meta[s]["dangling_mass"],
-                 "edges_processed": int(n_edges),
-                 "wall_ms": max(ln["wall_ms"][s] for ln in batch_lineage
-                                if s < len(ln["wall_ms"])),
-                 "mode": "csr_barrier"}
-            metrics.append(m)
-        if metrics:
-            metrics[-1]["job_phases"] = job_phases
-        it += steps_done
-        converged = step_meta[steps_done - 1]["l1_delta"] < tol if step_meta else False
-        if store is not None:
-            rdf = spark.createDataFrame(
-                pd.DataFrame({"idx": np.arange(n, dtype=np.int64), "rank": ranks})
-            )
-            store.write(it - 1, rdf, metrics[-1], partitions=batch_lineage)
-        _shutil.rmtree(bdir, ignore_errors=True)
+        # consume peer slice files as they land.  Slices are pre-blended
+        # and, with the missing positions, partition [0, n): the
+        # assembled matrix IS the next rank matrix.
+        pending = set(range(nt))
+        dparts = np.zeros((nt, q), dtype=np.float64)
+        deadline = _t.time() + 600.0
+        sleep = 1e-4
+        while pending:
+            landed = []
+            for t_ in pending:
+                p = _os.path.join(bdir, f"t_{g}_{t_}.npy")
+                if _os.path.exists(p):
+                    # mmap: sequential one-shot read straight from the
+                    # page cache, no heap copy of the peer file
+                    arr = np.load(p, mmap_mode="r")
+                    width = (len(arr) - q) // q
+                    dparts[t_] = arr[q * width:]
+                    peer = arr[:q * width].reshape(q, width)
+                    o = 0
+                    for b in task_blocks[t_]:
+                        # each block's slice is a contiguous span — memcpy
+                        contrib[:, offs[b]:offs[b] + lens[b]] = peer[:, o:o + lens[b]]
+                        o += lens[b]
+                    landed.append(t_)
+            pending.difference_update(landed)
+            if pending:
+                if landed:
+                    sleep = 1e-4
+                if _t.time() > deadline:
+                    raise RuntimeError(f"superstep {g}: peers {sorted(pending)} missing")
+                _t.sleep(sleep)
+                sleep = min(sleep * 1.5, 2e-3)
+        if miss_new is not None:
+            contrib[:, miss_idx] = miss_new
+        t2 = _t.time()
+        phases["consume_ms"].append((t2 - t1) * 1000)
 
-    return it, ranks, converged
+        # per-query L1 = the partials summed in fixed pid order — every
+        # task computes the identical floats, so the convergence decision
+        # (max over queries) needs no coordinator
+        delta = 0.0
+        for j in range(q):
+            dq = 0.0
+            for t_ in range(nt):
+                dq += float(dparts[t_, j])
+            delta = max(delta, dq)
+        prev, contrib = contrib, prev            # ping-pong
+        deltas.append(delta)
+        if pid == 0 and g > it0:
+            # every peer produced step g ⇒ nobody still reads g-1
+            for t_ in range(nt):
+                old = _os.path.join(bdir, f"t_{g - 1}_{t_}.npy")
+                if _os.path.exists(old):
+                    _os.unlink(old)
+        phases["blend_ms"].append((_t.time() - t2) * 1000)
+        walls.append((_t.time() - t0) * 1000)
+        if delta < c["tol"]:
+            break
+    lineage = {"pid": pid, "blocks": my_blocks, "wall_ms": walls,
+               "phases": {ph: [round(x, 1) for x in v] for ph, v in phases.items()},
+               "edges": int(sum(len(block(b)[0]) for b in my_blocks))}
+    yield (lineage, prev, deltas) if pid == 0 else (lineage, None, None)

@@ -96,10 +96,6 @@ class RetrievalConfig:
 def pad_to_dense_topk(
     ranked: DataFrame,      # (query_id, doc_id, score, rank), rank <= k
     queries: DataFrame,     # (query_id) — every query that must fill to k
-    positives: DataFrame,   # (query_id, doc_id) — the nonzero-score docs;
-                            # ``ranked`` itself is a valid argument, since a
-                            # query is only padded when it has < k positives,
-                            # i.e. when every positive row survived the top-k
     all_docs: DataFrame,    # (doc_id) — the full passage universe
     k: int,
 ) -> DataFrame:
@@ -111,13 +107,20 @@ def pad_to_dense_topk(
     so under-filled queries here get that tail appended: score ``0.0``,
     doc_id ascending, ranks continuing after the positive rows.
 
+    Only rows with score > 0 count as positives and come back as they
+    are; a 0.0-score row of ``ranked`` joins the zero tail in doc_id order
+    like any other unscored doc.  The positive set is complete for every
+    padded query: a query is only padded when it has < k positives, so no
+    positive row was cut at top-k.
+
     Scale: one global top-``2k`` sort on passage ids (an under-filled
     query has < k positive docs, so ≥ k of the 2k smallest ids score
     zero for it) broadcast-nested-looped against ONLY the under-filled
     queries — never the |V|×|Q| dense relation the sparse path exists
     to avoid."""
     k = int(k)
-    counts = ranked.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_pos"))
+    positives = ranked.where(F.col("score") > 0)
+    counts = positives.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_pos"))
     need = (
         queries.join(counts, "query_id", "left")
         .select("query_id", F.coalesce("n_pos", F.lit(0)).alias("n_pos"))
@@ -127,13 +130,13 @@ def pad_to_dense_topk(
     pad_w = Window.partitionBy("query_id").orderBy("doc_id")
     pads = (
         need.crossJoin(F.broadcast(pool))
-        .join(positives, ["query_id", "doc_id"], "left_anti")
+        .join(positives.select("query_id", "doc_id"), ["query_id", "doc_id"], "left_anti")
         .withColumn("_pr", F.row_number().over(pad_w))
         .where(F.col("_pr") + F.col("n_pos") <= k)
         .select("query_id", "doc_id", F.lit(0.0).alias("score"),
                 (F.col("_pr") + F.col("n_pos")).alias("rank"))
     )
-    return ranked.unionByName(pads)
+    return positives.unionByName(pads)
 
 
 class GraphRetriever:
@@ -351,16 +354,15 @@ class GraphRetriever:
             # persist the ≤ k·|Q|-row ranked relation: the under-fill
             # probe below materializes it (running the PPR job exactly
             # once), and the final plan — plus the pad plan's counts and
-            # anti-join when attached — reuses the cache; `ranked`
-            # doubles as the positive set, which is complete for exactly
-            # the queries that get padded (< k positives ⇒ nothing cut
-            # at top-k).  The probe is one scalar action over the cached
-            # relation, so the common all-queries-full case pays ~one
-            # small job instead of the pad plan's extra shuffles.
+            # anti-join when attached — reuses the cache.  Both count the
+            # same score > 0 rows as positives.  The probe is one scalar
+            # action over the cached relation, so the common
+            # all-queries-full case pays ~one small job instead of the pad
+            # plan's extra shuffles.
             graph_ranked = graph_ranked.persist()
             underfilled = (
                 have_facts.join(
-                    graph_ranked.groupBy("query_id").agg(
+                    graph_ranked.where(F.col("score") > 0).groupBy("query_id").agg(
                         F.count(F.lit(1)).alias("n_pos")),
                     "query_id", "left")
                 .where(F.coalesce("n_pos", F.lit(0)) < cfg.retrieval_top_k)
@@ -370,7 +372,6 @@ class GraphRetriever:
                 graph_ranked = pad_to_dense_topk(
                     graph_ranked,
                     queries=have_facts,
-                    positives=graph_ranked.select("query_id", "doc_id"),
                     all_docs=chunk_ids.select(F.col("node_id").alias("doc_id")),
                     k=cfg.retrieval_top_k,
                 )

@@ -31,7 +31,7 @@ reset = np.zeros({n})
 reset[:5] = 1.0
 # tol=0: runs until max_iter or the kill, checkpointing every superstep
 ppr_from_blocks(spark, blocks, reset, damping=0.85, tol=0.0, max_iter=500,
-                store=CheckpointStore(ckpt), checkpoint_every=1)
+                store=CheckpointStore(ckpt), supersteps_per_job=1)
 """
 
 

@@ -9,9 +9,8 @@ distributed dataframe backend runs every graph at one damping (Spark
 job-launch overhead per superstep), reached through its ``'csr'`` alias,
 plus a cross-mode equivalence test on a larger seeded graph.  The batch
 tests pin the local and dataframe backends against each other and against
-per-query single runs, including checkpoints written by one backend and
-resumed by the other, and the checkpoint/routing rules of the blocks
-backend."""
+per-query single runs, including checkpoints written by one backend
+(blocks among them) and resumed by another."""
 
 import itertools
 
@@ -169,12 +168,16 @@ def test_batch_matches_single_query_runs(spark):
 def test_batch_dataframe_checkpoint_resume(spark, tmp_path):
     """A truncated run's checkpoint resumes to the uninterrupted result at
     1e-10 whichever of the local and dataframe backends wrote it and
-    whichever resumes it — and through the single-query entry point."""
+    whichever resumes it, and likewise with blocks as writer and reader
+    (two queries per chunk, so the truncated blocks run crosses a chunk
+    boundary) — and through the single-query entry point."""
     rows, edges, resets, rdf = _batch_inputs(spark)
-    kw = dict(damping=0.5, tol=1e-12)
+    kw = dict(damping=0.5, tol=1e-12, n_blocks=4, query_chunk=2)
     full = personalized_pagerank_batch(spark, edges, rdf, mode="local", **kw)
     fp = {(r["query_id"], r["node_id"]): r["score"] for r in full.collect()}
-    for first, then in itertools.product(("local", "dataframe"), repeat=2):
+    pairs = list(itertools.product(("local", "dataframe"), repeat=2)) + [
+        ("blocks", "blocks"), ("blocks", "local"), ("local", "blocks")]
+    for first, then in pairs:
         ckpt = str(tmp_path / f"batch_{first}_{then}")
         # truncated run leaves a checkpoint behind
         personalized_pagerank_batch(spark, edges, rdf, mode=first, max_iter=6,
@@ -190,6 +193,7 @@ def test_batch_dataframe_checkpoint_resume(spark, tmp_path):
     single_rdf = spark.createDataFrame(list(reset.items()),
                                        "node_id string, reset_weight double")
     want = _run(spark, rows, reset, 0.5, "local", tol=1e-12)
+    kw = dict(damping=0.5, tol=1e-12)
     ckpt = str(tmp_path / "single")
     personalized_pagerank(spark, edges, single_rdf, mode="dataframe", max_iter=6,
                           checkpoint_dir=ckpt, **kw)
@@ -216,37 +220,6 @@ def test_resume_rejects_pre_batch_checkpoint(spark, tmp_path):
         with pytest.raises(ValueError, match="fresh checkpoint_dir"):
             personalized_pagerank(spark, edges, rdf, mode=mode,
                                   checkpoint_dir=ckpt, resume=True)
-
-
-def test_pinned_blocks_mode_rejects_checkpoint_dir(spark, tmp_path):
-    """blocks does not checkpoint: pinning it with a checkpoint_dir raises
-    before any layout work instead of silently running unresumable."""
-    _, edges, _, rdf = _batch_inputs(spark)
-    with pytest.raises(ValueError, match="does not checkpoint"):
-        personalized_pagerank_batch(
-            spark, edges, rdf, mode="blocks", blocks_edge_limit=0,
-            checkpoint_dir=str(tmp_path / "ckpt"), blocks_dir=str(tmp_path / "blocks"))
-    assert not (tmp_path / "blocks").exists()
-    assert not (tmp_path / "ckpt").exists()
-
-
-def test_auto_routes_checkpointed_run_to_dataframe(spark, tmp_path):
-    """Above blocks_edge_limit, auto keeps a checkpointed run on the
-    resumable dataframe backend rather than blocks."""
-    _, edges, _, rdf = _batch_inputs(spark)
-    kw = dict(damping=0.5, tol=1e-12)
-    ckpt = str(tmp_path / "ckpt")
-    got = personalized_pagerank_batch(
-        spark, edges, rdf, mode="auto", local_edge_limit=0, blocks_edge_limit=0,
-        checkpoint_dir=ckpt, blocks_dir=str(tmp_path / "blocks"), **kw)
-    gp = {(r["query_id"], r["node_id"]): r["score"] for r in got.collect()}
-    assert not (tmp_path / "blocks").exists()
-    assert CheckpointStore(ckpt).lineage()[-1]["metrics"]["mode"] == "dataframe"
-    want = personalized_pagerank_batch(spark, edges, rdf, mode="local", **kw)
-    wp = {(r["query_id"], r["node_id"]): r["score"] for r in want.collect()}
-    assert set(gp) == set(wp)
-    for kk in wp:
-        assert abs(gp[kk] - wp[kk]) < 1e-10, kk
 
 
 def test_global_pagerank_uniform_reset(spark):

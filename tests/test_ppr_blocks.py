@@ -2,6 +2,9 @@
 exact in-memory reference path, including unit/non-unit weights, dangling
 nodes, and checkpoint resume."""
 
+import json
+import os
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -11,7 +14,6 @@ from hipporag_spark.checkpoint import CheckpointStore
 from hipporag_spark.ppr import (
     personalized_pagerank,
     ppr_from_blocks,
-    ppr_from_blocks_batched,
     prepare_csr_blocks,
 )
 
@@ -84,7 +86,7 @@ def test_blocks_resume_matches_uninterrupted(spark, tmp_path):
 
     store = CheckpointStore(str(tmp_path / "ckpt"))
     ppr_from_blocks(spark, out, reset, damping=0.85, tol=1e-11, max_iter=5,
-                    store=store, checkpoint_every=1)
+                    store=store, supersteps_per_job=1)
     assert store.latest_step() == 4
     resumed = ppr_from_blocks(spark, out, reset, damping=0.85, tol=1e-11,
                               max_iter=200, store=store, resume=True)
@@ -99,11 +101,21 @@ def test_blocks_reject_zero_reset(spark, tmp_path):
     prepare_csr_blocks(spark, edges, out, n_blocks=2, int_ids=N, unit_weights=True)
     with pytest.raises(ValueError):
         ppr_from_blocks(spark, out, np.zeros(N))
+    # a layout written before the single relabeled format fails fast,
+    # naming the fix
+    meta_path = os.path.join(out, "meta.json")
+    with open(meta_path) as f:
+        meta = json.load(f)
+    del meta["layout"]
+    with open(meta_path, "w") as f:
+        json.dump(meta, f)
+    with pytest.raises(ValueError, match="re-run prepare_csr_blocks"):
+        ppr_from_blocks(spark, out, np.ones(N))
 
 
 @pytest.mark.parametrize("unit", [True, False])
 def test_batched_matches_per_job(spark, tmp_path, unit):
-    """Gang-scheduled K-supersteps-per-job path ≡ the per-job path bitwise
+    """K supersteps per gang-scheduled job ≡ one superstep per job, bitwise
     (same kernel and blend order)."""
     edges = _random_edges(spark, seed=4, weighted=not unit)
     out = str(tmp_path / f"blocks_batched_{unit}")
@@ -111,8 +123,9 @@ def test_batched_matches_per_job(spark, tmp_path, unit):
     reset = np.zeros(N)
     reset[[1, 200, 499]] = [0.25, 0.5, 0.25]
 
-    base = ppr_from_blocks(spark, out, reset, damping=0.85, tol=1e-11, max_iter=200)
-    got = ppr_from_blocks_batched(
+    base = ppr_from_blocks(spark, out, reset, damping=0.85, tol=1e-11, max_iter=200,
+                           supersteps_per_job=1)
+    got = ppr_from_blocks(
         spark, out, reset, damping=0.85, tol=1e-11, max_iter=200,
         supersteps_per_job=7,
     )
@@ -120,7 +133,7 @@ def test_batched_matches_per_job(spark, tmp_path, unit):
     gv = got.ranks.toPandas().sort_values("node_id")["score"].to_numpy()
     assert np.array_equal(bv, gv)  # bitwise: identical float ops in order
     assert got.converged and got.iterations == base.iterations
-    assert all(m["mode"] == "csr_barrier" for m in got.metrics)
+    assert all(m["mode"] == "blocks" for m in got.metrics)
 
 
 def test_batched_checkpoint_resume(spark, tmp_path):
@@ -130,19 +143,19 @@ def test_batched_checkpoint_resume(spark, tmp_path):
     reset = np.zeros(N)
     reset[:3] = 1.0
 
-    full = ppr_from_blocks_batched(spark, out, reset, damping=0.85, tol=1e-11,
-                                   max_iter=200, supersteps_per_job=8)
+    full = ppr_from_blocks(spark, out, reset, damping=0.85, tol=1e-11,
+                           max_iter=200, supersteps_per_job=8)
     store = CheckpointStore(str(tmp_path / "ckpt_b"))
-    ppr_from_blocks_batched(spark, out, reset, damping=0.85, tol=1e-11,
-                            max_iter=8, supersteps_per_job=8, store=store)
+    ppr_from_blocks(spark, out, reset, damping=0.85, tol=1e-11,
+                    max_iter=8, supersteps_per_job=8, store=store)
     latest = store.latest_step()
     assert latest == 7
     # per-partition lineage recorded with the batch checkpoint
     manifest = store.lineage()[-1]
     assert manifest["partitions"] and all("wall_ms" in p for p in manifest["partitions"])
-    resumed = ppr_from_blocks_batched(spark, out, reset, damping=0.85, tol=1e-11,
-                                      max_iter=200, supersteps_per_job=8,
-                                      store=store, resume=True)
+    resumed = ppr_from_blocks(spark, out, reset, damping=0.85, tol=1e-11,
+                              max_iter=200, supersteps_per_job=8,
+                              store=store, resume=True)
     fv = full.ranks.toPandas().sort_values("node_id")["score"].to_numpy()
     rv = resumed.ranks.toPandas().sort_values("node_id")["score"].to_numpy()
     assert np.allclose(fv, rv, atol=1e-9)
@@ -209,10 +222,10 @@ def test_batched_isolated_ids_blend(spark, tmp_path):
     reset[[0, 30, 63]] = [0.5, 0.25, 0.25]  # seeds include isolated ids
 
     base = ppr_from_blocks(spark, out, reset, damping=0.85, tol=1e-9,
-                           max_iter=300)
-    got = ppr_from_blocks_batched(spark, out, reset, damping=0.85,
-                                  tol=1e-9, max_iter=300,
-                                  supersteps_per_job=5)
+                           max_iter=300, supersteps_per_job=1)
+    got = ppr_from_blocks(spark, out, reset, damping=0.85,
+                          tol=1e-9, max_iter=300,
+                          supersteps_per_job=5)
     bv = base.ranks.toPandas().sort_values("node_id")["score"].to_numpy()
     gv = got.ranks.toPandas().sort_values("node_id")["score"].to_numpy()
     assert np.array_equal(bv, gv)

@@ -233,26 +233,28 @@ def test_dpr_reset_top_m_truncated_still_ranks(spark, built):
 def test_pad_to_dense_topk_unit(spark):
     """pad_to_dense_topk fills an under-filled query with zero-score
     docs ordered by doc_id, ranks continuing after the positives; a
-    full query and a zero-positive query are both handled."""
+    full query and a zero-positive query are both handled, and a 0.0-score
+    row in the input is not a positive: it comes back as a pad in doc_id
+    order, not at its input rank."""
     from hipporag_spark.retrieve import pad_to_dense_topk
 
     ranked = spark.createDataFrame(
-        [("qa", "d07", 0.9, 1), ("qa", "d03", 0.5, 2),
+        [("qa", "d07", 0.9, 1), ("qa", "d03", 0.5, 2), ("qa", "d01", 0.0, 3),
          ("qc", "d01", 0.8, 1), ("qc", "d02", 0.7, 2),
          ("qc", "d03", 0.6, 3), ("qc", "d04", 0.5, 4)],
         "query_id string, doc_id string, score double, rank int")
     queries = spark.createDataFrame([("qa",), ("qb",), ("qc",)],
                                     "query_id string")
-    positives = ranked.select("query_id", "doc_id")
     all_docs = spark.createDataFrame(
         [(f"d{i:02d}",) for i in range(10)], "doc_id string")
-    out = pad_to_dense_topk(ranked, queries, positives, all_docs, k=4)
+    out = pad_to_dense_topk(ranked, queries, all_docs, k=4)
     rows = sorted(out.collect(), key=lambda x: (x["query_id"], x["rank"]))
     by_q = {}
     for x in rows:
         by_q.setdefault(x["query_id"], []).append(
             (x["rank"], x["doc_id"], x["score"]))
-    # qa: 2 positives + 2 zero pads = smallest ids not in {d07, d03}
+    # qa: 2 positives + 2 zero pads = smallest ids not in {d07, d03};
+    # the 0.0-score d01 lands at rank 4 behind d00, not at its input rank 3
     assert by_q["qa"] == [(1, "d07", 0.9), (2, "d03", 0.5),
                           (3, "d00", 0.0), (4, "d01", 0.0)]
     # qb: no positives at all -> 4 smallest ids, all zero
